@@ -9,4 +9,4 @@ with Pandas UDFs only where built-in operators cannot express the semantics.
 __version__ = "0.1.0"
 
 from holochatstats_spark.session import get_spark  # noqa: F401
-from holochatstats_spark.tables import TABLES, load_table, load_all  # noqa: F401
+from holochatstats_spark.tables import TABLES, load_table  # noqa: F401

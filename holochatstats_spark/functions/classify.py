@@ -8,10 +8,9 @@ Parity notes vs the reference:
 - F1 `categorize_message` (chat_parser.py:60-93): ordered short-circuit
   reproduced exactly with a when() chain; Unicode script classes use
   Java's \\p{IsHiragana} etc., equivalent to Python `regex`'s \\p{Hiragana}.
-- F2 `_is_pure_emoji` (chat_parser.py:43-57): the default fast path uses a
-  curated emoji-codepoint class instead of the `emoji` library's full
-  database (documented divergence, flag-switched UDF fallback in
-  operators/emoji_udf.py for exact parity when the lib is present).
+- F2 `_is_pure_emoji` (chat_parser.py:43-57): a curated emoji-codepoint
+  class stands in for the `emoji` library's full database (documented
+  divergence; the library is not a dependency).
 - F3 `parse_membership_rank` (chat_parser.py:11-41).
 - F4 `has_humor` (feature_analysis.py:7-26), incl. its case-sensitivity
   quirks: the substring list matches the ORIGINAL case, `lol`/laughter

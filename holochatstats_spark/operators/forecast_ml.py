@@ -7,13 +7,11 @@ grouped-map Pandas UDF: `groupBy(series).applyInPandas(...)` — every
 series trains in parallel on its executor, Arrow moves the batches, and
 the driver never sees the data.
 
-Model: torch is not available in this container, so the default model is a
-deterministic numpy ridge autoregression (closed-form (XᵀX+λI)⁻¹Xᵀy over
-LAGS lagged values, recursive multi-step) — same applyInPandas plumbing,
-schema, and group shape the LSTM would use. If torch IS importable, the
-LSTM path can be slotted into `_fit_predict` without touching the Spark
-side; that branch currently raises NotImplementedError to avoid shipping
-an untestable code path (SURVEY §2.11).
+Model: torch is not a dependency, so the model is a deterministic numpy
+ridge autoregression (closed-form (XᵀX+λI)⁻¹Xᵀy over LAGS lagged values,
+recursive multi-step) — same applyInPandas plumbing, schema, and group
+shape the LSTM would use. An LSTM would replace `_fit_predict` without
+touching the Spark side.
 
 Excluded from the hash oracle (rows-only check): the reference model is
 MC-dropout nondeterministic, and float BLAS reductions vary across builds.
@@ -59,16 +57,6 @@ def _fit_predict(x: np.ndarray) -> tuple[list[float], str]:
     return out, f"ridge_ar{LAGS}"
 
 
-def _try_torch_lstm(x: np.ndarray) -> tuple[list[float], str]:
-    """LSTM path — requires torch (not in this container)."""
-    import torch  # noqa: F401  (gated: ImportError falls back to ridge)
-
-    raise NotImplementedError(
-        "LSTM training is stubbed: wire forecaster-equivalent torch code "
-        "here when torch is available (reference forecaster.py:201-273)"
-    )
-
-
 def forecast_per_series(
     monthly: DataFrame,
     series_col: str = "series",
@@ -81,10 +69,7 @@ def forecast_per_series(
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(month_col)
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        try:
-            preds, version = _try_torch_lstm(x)
-        except (ImportError, NotImplementedError):
-            preds, version = _fit_predict(x)
+        preds, version = _fit_predict(x)
         return pd.DataFrame(
             {
                 "series": pdf[series_col].iloc[0],

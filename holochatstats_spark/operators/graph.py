@@ -9,12 +9,9 @@ of message volume — at 100 TB it is still ~80×80. So the SURVEY §2.9 plan
 applies: collect the tiny edge list to the driver and run the graph
 algorithm there, keeping Spark for all data-sized work.
 
-Algorithm ladder (import-gated, best available wins):
-1. igraph + leidenalg (the reference's exact algorithm) — not in this
-   container, gated behind import;
-2. networkx greedy modularity communities (deterministic: no RNG in the
-   greedy agglomeration; nodes pre-sorted) — the default here;
-3. union-find connected components — always available, dependency-free.
+Algorithm: networkx greedy modularity communities (deterministic: no RNG
+in the greedy agglomeration; nodes pre-sorted). The reference's
+igraph + leidenalg is not a dependency.
 
 The query layer registers this rows-only (no DuckDB oracle): community
 detection output is algorithm-dependent by nature (SURVEY §5 fences V4
@@ -23,30 +20,11 @@ from the hash gate).
 
 from __future__ import annotations
 
+import networkx as nx
 from pyspark.sql import DataFrame
 
 
-def _leiden(nodes: list[str], edges: list[tuple[str, str, float]]):
-    import igraph  # noqa: F401  (import-gated: absent in this container)
-    import leidenalg
-
-    g = igraph.Graph()
-    g.add_vertices(nodes)
-    g.add_edges([(a, b) for a, b, _ in edges])
-    g.es["weight"] = [w for _, _, w in edges]
-    part = leidenalg.find_partition(
-        g,
-        leidenalg.RBConfigurationVertexPartition,
-        weights="weight",
-        resolution_parameter=1.0,
-        seed=42,
-    )
-    return {nodes[v]: ci for ci, comm in enumerate(part) for v in comm}, "leiden"
-
-
 def _greedy_modularity(nodes: list[str], edges: list[tuple[str, str, float]]):
-    import networkx as nx
-
     g = nx.Graph()
     g.add_nodes_from(sorted(nodes))
     g.add_weighted_edges_from(sorted(edges))
@@ -57,24 +35,6 @@ def _greedy_modularity(nodes: list[str], edges: list[tuple[str, str, float]]):
         for n in sorted(comm):
             mapping[n] = ci
     return mapping, "greedy_modularity"
-
-
-def _union_find(nodes: list[str], edges: list[tuple[str, str, float]]):
-    parent = {n: n for n in nodes}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b, _ in sorted(edges):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    roots = sorted({find(n) for n in nodes})
-    root_id = {r: i for i, r in enumerate(roots)}
-    return {n: root_id[find(n)] for n in nodes}, "connected_components"
 
 
 def detect_communities(
@@ -98,12 +58,7 @@ def detect_communities(
     if nodes_df is not None:
         nodes |= {r[0] for r in nodes_df.collect()}
     nodes = sorted(nodes)
-    for algo in (_leiden, _greedy_modularity, _union_find):
-        try:
-            mapping, name = algo(nodes, edges)
-            break
-        except ImportError:
-            continue
+    mapping, name = _greedy_modularity(nodes, edges)
     spark = edge_df.sparkSession
     return spark.createDataFrame(
         sorted((n, c, name) for n, c in mapping.items()),

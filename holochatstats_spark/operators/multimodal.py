@@ -9,10 +9,8 @@ Design (per the engine contract):
   whole-stage codegen — r21 ran this as a mapInPandas stage and the whole
   JVM→Arrow→pandas→JVM round trip existed only to compute expressions
   Spark already has (VERDICT r21 item 3 / r22 rewrite);
-- REAL decoders (PIL / soundfile / av) are not in this container: the
-  decode entry points below are import-gated stubs that raise
-  NotImplementedError. When a real decoder lands, ONLY the decode step
-  becomes a mapInArrow stage over `select(doc_id, payload)` (iterator
+- there is no real decoder (PIL / soundfile / av are not dependencies).
+  One would be a mapInArrow stage over `select(doc_id, payload)` (iterator
   form, decoder built once per task — guide §4.5), composing with the
   native features below.
 
@@ -30,14 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Output shape of extract_features — kept as documentation (it was the
-#: declared mapInPandas schema when extraction crossed the Python boundary)
-#: and as the contract a future real-decoder mapInArrow stage must emit.
-FEATURE_SCHEMA = (
-    "doc_id bigint, media_type string, n_bytes bigint, payload_md5 string, "
-    "width int, height int, sample_rate int, duration_sec double"
-)
-
 _SAMPLE_RATES = (8000, 16000, 22050, 44100)
 
 
@@ -52,29 +42,6 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
         .alias("media_type"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-
-
-def decode_image(payload: bytes):
-    """Real image decode — requires PIL (not in this container)."""
-    from PIL import Image  # noqa: F401  (import-gated stub)
-
-    raise NotImplementedError(
-        "image decode is stubbed: plug PIL.Image.open(BytesIO(payload)) "
-        "here when pillow is available"
-    )
-
-
-def decode_audio(payload: bytes):
-    """Real audio decode — requires soundfile/librosa (not installed)."""
-    import soundfile  # noqa: F401  (import-gated stub)
-
-    raise NotImplementedError("audio decode is stubbed (needs soundfile)")
-
-
-def _fake_dims(md5_hex: str) -> tuple[int, int]:
-    h1 = int(md5_hex[:8], 16)
-    h2 = int(md5_hex[8:16], 16)
-    return h1 % 1920 + 1, h2 % 1080 + 1
 
 
 def extract_features(media: DataFrame) -> DataFrame:

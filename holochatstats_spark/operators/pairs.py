@@ -44,20 +44,18 @@ downstream exactly as before.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def default_bucket_chunks() -> int:
-    """Chunks per bucket: per-task pair work is ~m^2/K for a hot bucket of
-    m members. 32 bounds a worst-case cluster 32x at the cost of at most
-    32 aggregation groups per bucket (tiny buckets occupy min(m, K) chunks,
-    so the common case is unchanged). Cluster-side, raise via env to
-    taste — the guard's correctness does not depend on the value."""
-    return int(os.environ.get("SPARK_GRAFT_LSH_CHUNKS", "32"))
+#: Chunks per bucket: per-task pair work is ~m^2/K for a hot bucket of m
+#: members. 32 bounds a worst-case cluster 32x at the cost of at most 32
+#: aggregation groups per bucket (tiny buckets occupy min(m, K) chunks, so
+#: the common case is unchanged). The guard's correctness does not depend
+#: on the value.
+BUCKET_CHUNKS = 32
 
 
 def bucket_pairs(
@@ -65,7 +63,7 @@ def bucket_pairs(
     key_cols: list[str],
     member_col: str = "m",
     id_field: str = "doc_id",
-    n_chunks: int | None = None,
+    n_chunks: int = BUCKET_CHUNKS,
 ) -> DataFrame:
     """All unordered within-bucket member pairs, hot-bucket-guarded.
 
@@ -74,10 +72,11 @@ def bucket_pairs(
     ``a.<id_field> < b.<id_field>``); pairs occurring in several buckets
     appear once per bucket, as with the plain double-explode.
     """
-    k = n_chunks or default_bucket_chunks()
     mid = F.col(f"{member_col}.{id_field}")
     chunked = (
-        bands.withColumn("_chunk", F.pmod(F.xxhash64(mid), F.lit(k)).cast("int"))
+        bands.withColumn(
+            "_chunk", F.pmod(F.xxhash64(mid), F.lit(n_chunks)).cast("int")
+        )
         .groupBy(*key_cols, "_chunk")
         .agg(F.collect_list(member_col).alias("_ms"))
     )

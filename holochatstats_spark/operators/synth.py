@@ -15,10 +15,9 @@ classification branch (pure emoji, shortcode runs, JP script + ｗ laugh,
 Hangul, Cyrillic, numeric, URLs, empty) and the F4 humor triggers; the
 badge pool covers every F3 parse branch.
 
-Timestamps: the parquet is TIMESTAMP(NANOS); Spark truncates to µs at load
-(tables.py), so the SQL twin truncates identically via
-make_timestamp(epoch_ns // 1000) — both engines see the same µs grain by
-construction (ADVICE r1).
+Timestamps: the parquet is TIMESTAMP(MICROS) (tables.py), so both engines
+see the same µs grain; the SQL twin's make_timestamp(epoch_ns // 1000) is
+the identity on it.
 """
 
 from __future__ import annotations

@@ -65,94 +65,9 @@ def register(
     return deco
 
 
-# The driver's correctness artifact evaluates queries() in dict order and
-# caps at ~50 rows per round — so ordering is load-bearing: queries whose
-# last driver-verified row is oldest go FIRST, so every operator keeps
-# accumulating a fresh driver row across rounds even though each round
-# truncates the tail. The rotation is programmatic: we parse every
-# CORRECTNESS_r*.json at the repo root and sort the registry by the round
-# each query last appeared in (never recorded => round 0 => front of the
-# queue), tie-broken by registration order. Queries whose SEMANTICS changed
-# can be pinned to the very front via _SEMANTICS_CHANGED: {name: round the
-# semantics changed in}. A pin SELF-EXPIRES once a driver row from that
-# round or later lands, so it never burns gate slots re-verifying
-# already-fresh queries (VERDICT r8: the r3 pins wasted 2 of 50 slots per
-# round for three rounds after their fresh rows landed in r5).
-_SEMANTICS_CHANGED: dict[str, int] = {
-    # r9 planted deterministic burst clusters in operators/synth.py
-    # (velocity_bursts_exact non-empty oracle). The burst rows are
-    # new_member/rank=-2/empty-message at an existing event's exact ts, so
-    # the ud aggregate, video time stats, and humor buckets are invariant —
-    # only the three queries that COUNT raw synth-message rows change and
-    # need a fresh driver row.
-    "velocity_bursts_exact": 9,
-    "message_classification": 9,
-    "highlight_windows": 9,
-}
-
-
-def _last_recorded_round() -> dict[str, int]:
-    """Map query name -> newest round whose CORRECTNESS_r*.json has a
-    SUCCESSFUL row for it. Only the repo root (derived from __file__) is
-    scanned — never cwd, so registry order is caller-independent. A row
-    counts as recorded only if it did not fail: err must be absent or the
-    designed ``no_oracle`` rows-only marker, and hash_match must not be
-    False — an errored/mismatched query should bubble back to the front of
-    the gate queue, not look freshly verified."""
-    import json
-    import re
-    from pathlib import Path
-
-    last: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[2]
-    try:
-        artifacts = sorted(root.glob("CORRECTNESS_r*.json"))
-    except OSError:
-        artifacts = []
-    for path in artifacts:
-        m = re.search(r"r(\d+)", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict):
-                if row.get("err") not in (None, "no_oracle"):
-                    continue
-                if row.get("hash_match") is False:
-                    continue
-            last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def gate_order(registry: dict[str, Query]) -> list[str]:
-    """Registry names sorted least-recently-driver-recorded first."""
-    last = _last_recorded_round()
-    reg_pos = {n: i for i, n in enumerate(registry)}
-    # a pin holds only until a driver row from the change round (or later)
-    # lands — then it expires and the query rejoins the staleness order
-    pinned = [
-        n
-        for n, changed_rnd in _SEMANTICS_CHANGED.items()
-        if n in registry and last.get(n, 0) < changed_rnd
-    ]
-
-    def key(name: str) -> tuple[int, int]:
-        return (last.get(name, 0), reg_pos[name])
-
-    rest = sorted((n for n in registry if n not in pinned), key=key)
-    return pinned + rest
-
-
 def load_all_queries() -> dict[str, Query]:
     """Import every query module (side effect: fills REGISTRY), returning
-    the registry reordered least-recently-driver-recorded first (see
-    gate_order)."""
+    the registry in registration order."""
     from holochatstats_spark.queries import (  # noqa: F401
         chat_pipeline,
         forecast,
@@ -166,4 +81,4 @@ def load_all_queries() -> dict[str, Query]:
         vector,
     )
 
-    return {n: REGISTRY[n] for n in gate_order(REGISTRY)}
+    return dict(REGISTRY)

@@ -425,9 +425,9 @@ def _type_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # V4 — channel clustering (api.py:418-487: V1 similarity → V3 threshold →
 # Leiden). Distributed up to the edge list; the graph partition runs on
-# the driver (operators/graph.py: leiden if importable, else deterministic
-# greedy modularity, else components). Rows-only: community detection is
-# fenced from the hash oracle (SURVEY §5).
+# the collected edge list (operators/graph.py: deterministic greedy
+# modularity). Rows-only: community detection is fenced from the hash
+# oracle (SURVEY §5).
 # ---------------------------------------------------------------------------
 @register(
     "channel_clustering",

@@ -59,14 +59,10 @@ def get_spark(app_name: str = "holochatstats-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # Shuffle width: one partition per core locally (default 32, same
-        # value every recorded bench used); cluster-side override via env —
-        # size so post-shuffle partitions land ~128-256 MB (guide §2.2),
-        # e.g. ~400k for a 100 TB shuffle — and let AQE coalesce down.
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-        )
+        # Shuffle width: 32, the value every recorded bench used; AQE
+        # coalesces down. A cluster sizes it so post-shuffle partitions
+        # land ~128-256 MB (guide §2.2), e.g. ~400k for a 100 TB shuffle.
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dims here are KB-scale; broadcast aggressively. AQE will also
         # convert to broadcast at runtime when a side is small post-filter.

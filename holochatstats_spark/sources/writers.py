@@ -84,29 +84,3 @@ def export_csv(
         df = df.coalesce(1)
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-) -> None:
-    """Bucketed external table (SURVEY §7: bucket user_id for the J6/J7
-    overlap self-joins at 100 TB).
-
-    Both sides of a join bucketed by the join key into the same bucket
-    count are CO-LOCATED: the join compiles to a zero-exchange sort-merge
-    join (verified by tests/test_plans.py::test_bucketed_join_has_no_shuffle).
-    At 100 TB this converts the overlap matrix's one big shuffle into a
-    bucket-local merge — the shuffle is paid once at write time and
-    amortized over every subsequent join.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(name)
-    )

@@ -10,12 +10,15 @@ month-partitioned (events) or date-partitioned (lineitem) parquet/Delta;
 loaders keep the single-directory layout the driver provides but all query
 code filters on the partition-able columns so partition pruning engages
 unchanged on a partitioned layout.
+
+The timestamp columns (events.ts, orders.o_orderdate, lineitem.l_shipdate)
+are parquet TIMESTAMP(MICROS) without UTC adjustment, which Spark reads as
+``timestamp_ntz`` — the same naive wall-clock values DuckDB sees.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -30,36 +33,8 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_DIMS = ("region", "nation", "supplier", "part", "customer")
-
-# The driver writes pandas-style TIMESTAMP(NANOS) parquet, which Spark's
-# vectorized reader rejects. We read nanos as INT64 (legacy conf) and
-# rebuild proper TimestampType columns (µs precision — all query semantics
-# are second-grained or coarser, same as DuckDB's ns view of the files).
-# ADVICE r1 precision risk: the oracle reads full ns while Spark sees µs —
-# verified empirically that every ts in sf0.001/sf0.01/sf0.1 has ZERO
-# sub-µs component (epoch_ns % 1000 == 0 for all rows), and the generator
-# is seed-fixed, so the truncation is value-preserving on this data; new
-# oracle queries that OUTPUT raw timestamps still truncate explicitly via
-# make_timestamp(epoch_ns // 1000) (see operators/synth.py).
-_NANO_TS_COLUMNS = {
-    "events": ("ts",),
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _NANO_TS_COLUMNS.get(name, ()):
-        if dict(df.dtypes).get(col) == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -34,29 +34,16 @@ def test_registry_metadata():
 
 
 def test_gate_order_is_least_recently_recorded():
-    """The driver records the first ~50 queries() entries per round, so the
-    registry must be ordered least-recently-driver-recorded first: every
+    """The correctness gate records the first ~50 queries() entries per
+    round, so queries() must be ordered least-recently-verified first: every
     query's last-recorded round (from CORRECTNESS_r*.json) must be
-    non-decreasing across the returned ordering, after the pinned
-    semantics-changed prefix."""
-    from holochatstats_spark.queries import (
-        _SEMANTICS_CHANGED,
-        _last_recorded_round,
-        load_all_queries,
-    )
+    non-decreasing across the returned ordering. The library registry
+    itself stays in registration order."""
+    from holochatstats_spark.queries import REGISTRY, load_all_queries
 
-    names = list(load_all_queries())
-    last = _last_recorded_round()
-    if not last:  # fresh checkout without artifacts: registration order is fine
-        return
-    # a pin holds only until a driver row from the change round (or later)
-    # lands — mirror gate_order's expiry predicate, else this test goes
-    # stale the moment a CORRECTNESS artifact satisfies a pin (VERDICT r9)
-    pinned = [
-        n
-        for n, changed_rnd in _SEMANTICS_CHANGED.items()
-        if n in names and last.get(n, 0) < changed_rnd
-    ]
-    assert names[: len(pinned)] == pinned
-    rounds = [last.get(n, 0) for n in names[len(pinned) :]]
-    assert rounds == sorted(rounds), "registry not sorted by staleness"
+    assert list(load_all_queries()) == list(REGISTRY)
+    names = list(entrymod.queries())
+    assert sorted(names) == sorted(REGISTRY)
+    last = entrymod._last_recorded_round()
+    rounds = [last.get(n, 0) for n in names]
+    assert rounds == sorted(rounds), "queries() not sorted by staleness"

@@ -1,6 +1,5 @@
-"""Multimodal plumbing tests: Arrow batch shape through mapInPandas,
-deterministic fake-decode values, NULL-typed metadata per modality, and
-the import-gated real-decoder stubs."""
+"""Multimodal plumbing tests: payload bytes per modality, deterministic
+fake-decode values and NULL-typed metadata per modality."""
 
 from __future__ import annotations
 
@@ -9,8 +8,6 @@ import hashlib
 import pytest
 
 from holochatstats_spark.operators.multimodal import (
-    decode_audio,
-    decode_image,
     extract_features,
     synthesize_media,
 )
@@ -59,11 +56,3 @@ def test_feature_extraction_batch_roundtrip(spark):
     assert vid["width"] is not None
     assert vid["duration_sec"] == pytest.approx(vid["n_bytes"] / 2048.0)
 
-
-def test_real_decoders_are_import_gated_stubs():
-    # the libs are absent in this container: the stub must fail loudly at
-    # the import, never silently fake a decode
-    with pytest.raises((ImportError, NotImplementedError)):
-        decode_image(b"\x89PNG")
-    with pytest.raises((ImportError, NotImplementedError)):
-        decode_audio(b"RIFF")

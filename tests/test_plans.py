@@ -60,37 +60,6 @@ def test_lsh_uses_arrow_batched_udf(spark, registry):
     assert "BatchEvalPython" not in plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    # the 100 TB co-location story (SURVEY §7): two tables bucketed on the
-    # join key join WITHOUT any exchange
-    from holochatstats_spark.plans.audit import plan_summary
-    from holochatstats_spark.sources.writers import write_bucketed_table
-
-    left = spark.range(0, 1000).selectExpr("id AS user_id", "id % 7 AS a")
-    right = spark.range(0, 1000).selectExpr("id AS user_id", "id % 3 AS b")
-    write_bucketed_table(left, "bkt_left", str(tmp_path / "l"), ["user_id"], 8)
-    write_bucketed_table(right, "bkt_right", str(tmp_path / "r"), ["user_id"], 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the planner must pick sort-merge — at 100 TB
-        # neither side is broadcastable, which is the case bucketing serves
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("bkt_left").join(spark.table("bkt_right"), "user_id")
-        from holochatstats_spark.plans.audit import executed_plan
-
-        plan = executed_plan(j)
-        s = plan_summary(j)
-        assert s["exchanges"] == 0 and s["broadcasts"] == 0, (
-            "bucketed sort-merge join must not shuffle"
-        )
-        assert "Bucketed: true" in plan
-        assert j.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
 def test_lsh_signature_udf_evaluated_once_per_side(spark, registry):
     # r21 eliminated r20's 4x ArrowEvalPython (bands self-join + join-key
     # null filters pushed below the udf). r22's hot-bucket guard
@@ -149,36 +118,3 @@ def test_rewritten_queries_scan_input_once(spark, registry):
         n = plan.count("FileScan")
         assert n <= cap, f"{name}: {n} FileScans (cap {cap})"
 
-
-def test_salted_agg_matches_plain_agg(spark):
-    # skew-salting equivalence: two-stage (key, salt) -> key aggregation
-    # must produce exactly the plain groupBy result
-    from pyspark.sql import functions as F
-
-    from holochatstats_spark.operators.skew import salted_agg
-    from holochatstats_spark.tables import load_table
-
-    ev = load_table(spark, SF, "events")
-    plain = {
-        r["event_type"]: r
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("total"),
-            F.max("user_id").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        r["event_type"]: r
-        for r in salted_agg(
-            ev,
-            ["event_type"],
-            {"n": ("value", "count"), "total": ("value", "sum"), "mx": ("user_id", "max")},
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert salted[k]["n"] == plain[k]["n"]
-        assert salted[k]["mx"] == plain[k]["mx"]
-        assert abs(salted[k]["total"] - plain[k]["total"]) < 1e-6

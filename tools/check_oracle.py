@@ -20,6 +20,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     registry = load_all_queries()
+    unknown = only - set(registry)
+    if unknown:
+        sys.exit(
+            f"unknown query name(s): {sorted(unknown)}; "
+            f"known: {sorted(registry)}"
+        )
     spark = get_spark("oracle-check")
     con = duck_connection(sf_dir)
 
