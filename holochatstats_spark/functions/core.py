@@ -47,12 +47,6 @@ def round_half_up(c: Column, scale: int) -> Column:
     return F.floor(c.cast("double") * p + F.lit(0.5)) / p
 
 
-def sql_round_half_up(expr: str, scale: int) -> str:
-    """The DuckDB-side twin of :func:`round_half_up`."""
-    p = 10**scale
-    return f"FLOOR(({expr}) * {p} + 0.5) / {p}"
-
-
 def pct_round(num: Column, den: Column, scale: int = 2) -> Column:
     """Percent-of-total with the reference's rounding (A8)."""
     return round_half_up(safe_div(num.cast("double") * 100.0, den), scale)

@@ -29,7 +29,7 @@ Semantics reproduced (and where they differ, why):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.classify import (
@@ -54,6 +54,25 @@ def classify_messages(messages: DataFrame) -> DataFrame:
     )
 
 
+def message_counters() -> list[Column]:
+    """The A1 message counters, one aggregate per COUNTED_CATEGORIES entry
+    plus total_message_count. A row counts iff it is not a membership
+    event and its category survived classification. build_user_data and
+    the streaming stream_user_counters both aggregate with this one list,
+    so the stream's window rollup equals the batch silver counters by
+    construction."""
+    is_member_event = F.col("message_type").isin(*MEMBER_EVENT_TYPES)
+    is_counted = ~is_member_event & F.col("message_category").isNotNull()
+
+    def count_where(cond: Column, name: str) -> Column:
+        return F.sum(F.when(cond, 1).otherwise(0)).cast("int").alias(name)
+
+    return [
+        count_where(is_counted & (F.col("message_category") == c), f"{c}_count")
+        for c in COUNTED_CATEGORIES
+    ] + [count_where(is_counted, "total_message_count")]
+
+
 def build_user_data(
     messages: DataFrame,
     default_year: int | None = None,
@@ -70,8 +89,6 @@ def build_user_data(
         msgs = msgs.withColumn("seq", F.lit(0).cast("long"))
 
     is_member_event = F.col("message_type").isin(*MEMBER_EVENT_TYPES)
-    # a chat message only counts if it survived classification
-    is_counted_msg = (~is_member_event) & F.col("message_category").isNotNull()
     # rank is "known" unless NULL (no badge parsed — not rank-bearing) or a
     # badge-less gift event (rank -2); a NULL-rank chat message must not
     # shadow an earlier known rank (ADVICE r1: the bare coalesce collapsed
@@ -81,24 +98,12 @@ def build_user_data(
     )
     order_key = F.struct(F.col("ts"), F.col("seq"))
 
-    cat_counters = [
-        F.sum(
-            F.when(is_counted_msg & (F.col("message_category") == c), 1).otherwise(0)
-        )
-        .cast("int")
-        .alias(f"{c}_count")
-        for c in COUNTED_CATEGORIES
-    ]
-
     per_user = (
         msgs.groupBy("channel_id", "video_id", "user_id")
         .agg(
             F.max_by("username", order_key).alias("username"),
             F.max("ts").alias("last_message_at"),
-            *cat_counters,
-            F.sum(F.when(is_counted_msg, 1).otherwise(0))
-            .cast("int")
-            .alias("total_message_count"),
+            *message_counters(),
             F.coalesce(
                 F.max_by(
                     F.when(has_known_rank, F.col("membership_rank")),

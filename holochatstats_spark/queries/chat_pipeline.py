@@ -13,7 +13,7 @@ the much smaller silver frame; channels is a broadcast dim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.classify import (
@@ -357,16 +357,29 @@ _VIDEO_STATS_SQL = """
 """
 
 
+def _video_span(last: Column, first: Column) -> list[Column]:
+    """end_epoch / duration_sec (+30 s pad) of a video from its last and
+    first message epochs — the one Spark definition of the span math
+    _VIDEO_STATS_SQL states for the oracle."""
+    return [last.alias("end_epoch"), (last - first + 30).alias("duration_sec")]
+
+
 def _video_stats(msgs: DataFrame) -> DataFrame:
-    """Spark twin of _VIDEO_STATS_SQL (streaming_hours_agg consumer;
-    funniest/highlights now fold the same end/duration math out of their
-    single bucket-stats pass — the +30s pad appears verbatim there and
-    stays pinned to the shared oracle CTE by the driver hash)."""
+    """Spark twin of _VIDEO_STATS_SQL: one row per (channel, video)."""
     epoch = F.unix_timestamp("ts")
     return msgs.groupBy("channel_id", "video_id").agg(
-        F.max(epoch).alias("end_epoch"),
-        (F.max(epoch) - F.min(epoch) + 30).alias("duration_sec"),
+        *_video_span(F.max(epoch), F.min(epoch))
     )
+
+
+def _bucket_video_span() -> list[Column]:
+    """_video_span as (channel, video) window columns over per-bucket
+    ``mn``/``mx`` epochs: consumers whose rank window is already
+    partitioned by (channel, video) read the span off that partitioning
+    instead of a second aggregate + join-back. The max of the bucket
+    maxima is the per-video MAX(ts), so the values equal _video_stats'."""
+    w_v = Window.partitionBy("channel_id", "video_id")
+    return _video_span(F.max("mx").over(w_v), F.min("mn").over(w_v))
 
 
 @register(
@@ -404,15 +417,21 @@ def _video_stats(msgs: DataFrame) -> DataFrame:
     survey="J10,A11,T7,F4",
 )
 def funniest_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    """One bucket-stats pass serves both consumers: per 30 s bucket, the
+    humor count and the min/max epoch; the per-video span is read off the
+    same rows (_bucket_video_span).
 
+    The span windows run before the weight > 0 filter, so zero-humor
+    buckets still feed end_epoch/duration exactly as the oracle's vids
+    CTE; a (channel, video) survives iff it has a weight > 0 bucket — the
+    membership of the oracle's inner funniest JOIN. The oracle's
+    last_chat CTE (MAX(last_message_at) over silver per video) equals
+    end_epoch: silver's last_message_at is the per-user MAX(ts), and the
+    max of per-user maxima is the per-video MAX(ts), so no silver
+    aggregate is built here.
+    """
     ev = load_table(spark, sf_dir, "events")
     msgs = synthetic_messages(ev)
-    # ONE bucket-stats pass serves both consumers (r20 aggregated msgs
-    # twice: humor buckets + _video_stats): per 30 s bucket, the humor
-    # count AND the min/max epoch; per-video stats fold the bucket minima/
-    # maxima. Buckets with zero humor are dropped before ranking, exactly
-    # the oracle's COUNT(*) WHERE humor semantics. Guide §1.2.
     epoch = F.unix_timestamp("ts")
     bstats = msgs.groupBy(
         "channel_id",
@@ -423,38 +442,12 @@ def funniest_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(epoch).alias("mn"),
         F.max(epoch).alias("mx"),
     )
-    # r22 (guide §2.4): the per-video stats are max/min folds of the SAME
-    # bucket frame the ranking consumes, and the rank window is already
-    # partitioned by (channel, video) — so they ride the bucket rows as
-    # window columns over that one partitioning instead of a second
-    # aggregate + join-back (the r21 shape's vids groupBy shuffled bstats
-    # again and re-joined it). The stats windows run BEFORE the weight>0
-    # filter, so zero-humor buckets still feed end_epoch/duration exactly
-    # as the vids aggregate did; a (channel, video) group survives to the
-    # output iff it has a weight>0 row — the same membership the inner
-    # funniest JOIN produced.
-    w_v = Window.partitionBy("channel_id", "video_id")
     w_f = Window.partitionBy("channel_id", "video_id").orderBy(
         F.desc("weight"), F.asc("bucket")
     )
-    # last_chat ≡ end_epoch: the oracle's last_chat CTE is
-    # MAX(last_message_at) over ud per (channel, video), and ud's
-    # last_message_at is MAX(ts) per (channel, video, user) — the max of
-    # per-user maxima over all users IS the per-video MAX(ts), which
-    # the bucket maxima fold to (member events advance both the same
-    # way). r20 rebuilt the ENTIRE silver aggregate (a full extra msgs
-    # groupBy + its scan) just to re-derive that column; the oracle keeps
-    # the ud CTE and the hash is unchanged. Guide §1.2.
     funniest = (
         bstats.select(
-            "channel_id",
-            "video_id",
-            "bucket",
-            "weight",
-            F.max("mx").over(w_v).alias("end_epoch"),
-            (F.max("mx").over(w_v) - F.min("mn").over(w_v) + 30).alias(
-                "duration_sec"
-            ),
+            "channel_id", "video_id", "bucket", "weight", *_bucket_video_span()
         )
         .where(F.col("weight") > 0)
         .withColumn("rn", F.row_number().over(w_f))
@@ -517,13 +510,12 @@ def funniest_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="J9,A12,T5",
 )
 def highlight_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+    """One bucket-stats pass serves both the velocity ranking and the
+    per-video span (_bucket_video_span), as in funniest_timestamps. Every
+    video has at least one bucket and rn <= 3 keeps at least one row per
+    video, so the oracle's inner-join membership is unchanged."""
     ev = load_table(spark, sf_dir, "events")
     msgs = synthetic_messages(ev)
-    # ONE bucket-stats pass serves both the velocity ranking and the
-    # per-video stats (r20 aggregated msgs twice) — same pattern as
-    # funniest_timestamps. Guide §1.2.
     epoch = F.unix_timestamp("ts")
     vel = msgs.groupBy(
         "channel_id",
@@ -534,27 +526,11 @@ def highlight_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(epoch).alias("mn"),
         F.max(epoch).alias("mx"),
     )
-    # r22 (guide §2.4): per-video end/duration ride the bucket rows as
-    # window columns over the SAME (channel, video) partitioning the rank
-    # window needs, replacing the r21 vids aggregate + join-back (one
-    # fewer shuffle of the bucket frame and no join). Every video has
-    # ≥1 bucket and rn <= 3 keeps ≥1 row per video, so the inner-join
-    # membership is unchanged.
-    w_v = Window.partitionBy("channel_id", "video_id")
     w_r = Window.partitionBy("channel_id", "video_id").orderBy(
         F.desc("n_events"), F.asc("bucket")
     )
     highlights = (
-        vel.select(
-            "channel_id",
-            "video_id",
-            "bucket",
-            "n_events",
-            F.max("mx").over(w_v).alias("end_epoch"),
-            (F.max("mx").over(w_v) - F.min("mn").over(w_v) + 30).alias(
-                "duration_sec"
-            ),
-        )
+        vel.select("channel_id", "video_id", "bucket", "n_events", *_bucket_video_span())
         .withColumn("rn", F.row_number().over(w_r))
         .where(F.col("rn") <= 3)
         .select(
@@ -801,8 +777,6 @@ def membership_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break (last_message_at alone underdetermines order
     when two videos share a max-ts; the reference inherits psql's
     nondeterminism there)."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     ud = build_user_data(synthetic_messages(ev))
     month = F.date_trunc("month", F.col("last_message_at"))
@@ -876,19 +850,10 @@ def membership_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tie order, lead-up) stays pinned on a dense hand-built frame in
 # tests/test_velocity_exact.py.
 # ---------------------------------------------------------------------------
-_VBE_VIDS_SQL = """
-      SELECT channel_id, video_id,
-             MAX(epoch_us(ts) // 1000000) AS end_epoch,
-             MAX(epoch_us(ts) // 1000000) - MIN(epoch_us(ts) // 1000000) + 30
-               AS duration_sec
-      FROM msgs GROUP BY 1, 2
-"""
-
-
 @register(
     "velocity_bursts_exact",
     oracle=with_synth_ctes(f"""
-    , vids AS ({_VBE_VIDS_SQL}
+    , vids AS ({_VIDEO_STATS_SQL}
     ), eligible AS (
       SELECT *, end_epoch - duration_sec AS start_epoch,
              LEAST(5, GREATEST(1, duration_sec // 1800)) AS num_highlights
@@ -933,32 +898,20 @@ def velocity_bursts_from(msgs: DataFrame, channels: DataFrame) -> DataFrame:
     """Core of velocity_bursts_exact over any (channel_id, video_id, ts)
     messages frame — split out so tests can drive it with dense bursts.
 
-    Per-second pre-aggregate (guide §2.3 aggregate-before-shuffle +
-    §1.2): every downstream decision — video duration, safe-zone filter,
-    15 s bucketing — is second-grained, so the msgs lineage is reduced
-    ONCE to (channel, video, sec, cnt) and both the per-video stats and
-    the bucket counts derive from it (r20 scanned/aggregated the raw
-    messages twice). n_msgs = SUM(cnt) ≡ the per-message COUNT(*).
+    Every decision (video span, safe-zone filter, 15 s bucketing) is
+    second-grained, so the messages are reduced once to (channel, video,
+    sec, cnt) before any shuffle and everything derives from that frame;
+    n_msgs = SUM(cnt) ≡ the per-message COUNT(*).
 
-    r22 (guide §2.4 — two operations keyed the same way share one
-    exchange): everything after the per-second aggregate is keyed by
-    (channel, video) or a superset — the per-video stats, the safe-zone
-    filter, the 15 s bucket aggregate, the highlight rank window. The r21
-    shape re-shuffled for each (vids aggregate + join back + bucket
-    aggregate + rank window = 4 more exchanges). Now the small per-second
-    frame is hash-partitioned by (channel, video) ONCE; the per-video
-    stats become a window over that partitioning (same max/min values the
-    vids aggregate produced, so the eligible/safe-zone/num_highlights
-    math is unchanged row for row), and the bucket aggregate and rank
-    window run exchange-free because hashpartitioning(channel, video)
-    satisfies their (channel, video, ...) clustering. 6 → 3 exchanges;
-    the (channel, video) exchange moves per-second counts, never raw
-    messages, keeping the §2.3 map-side reduction intact (it is the
-    window's own required distribution, so AQE may still coalesce it).
+    Everything after that aggregate is keyed by (channel, video) or a
+    superset — the span windows, the safe-zone filter, the 15 s bucket
+    aggregate, the highlight rank window — so the per-second frame is
+    hash-partitioned by (channel, video) once and the rest runs
+    exchange-free on that partitioning. The span windows see the same
+    max/min seconds the oracle's vids CTE aggregates, so the
+    eligible/safe-zone/num_highlights math is unchanged row for row.
     Per-video window state is bounded by a video's duration in seconds.
     """
-    from pyspark.sql import Window
-
     epoch = F.unix_timestamp("ts")
     persec = msgs.groupBy("channel_id", "video_id", epoch.alias("sec")).agg(
         F.count("*").alias("cnt")
@@ -969,16 +922,13 @@ def velocity_bursts_from(msgs: DataFrame, channels: DataFrame) -> DataFrame:
         "video_id",
         "sec",
         "cnt",
-        (F.max("sec").over(w_v) - F.min("sec").over(w_v) + 30).alias(
-            "duration_sec"
-        ),
-        (F.min("sec").over(w_v) - 30).alias("start_epoch"),
+        *_video_span(F.max("sec").over(w_v), F.min("sec").over(w_v)),
     )
-    elapsed = F.col("sec") - F.col("start_epoch")
-    # start_epoch = end_epoch - duration_sec = min(sec) - 30, and
-    # start_epoch / num_highlights are constant per (channel, video):
-    # carry them through the bucket aggregate (max of a constant) instead
-    # of re-joining per-video stats after it (guide §2.4/§1.2).
+    start_epoch = F.col("end_epoch") - F.col("duration_sec")
+    elapsed = F.col("sec") - start_epoch
+    # start_epoch and num_highlights are constant per (channel, video):
+    # they ride through the bucket aggregate (max of a constant) instead
+    # of a join back to per-video stats after it
     safe = (
         stats.where(F.col("duration_sec") >= 600)
         .where(
@@ -990,7 +940,7 @@ def velocity_bursts_from(msgs: DataFrame, channels: DataFrame) -> DataFrame:
             "video_id",
             elapsed.alias("elapsed"),
             "cnt",
-            "start_epoch",
+            start_epoch.alias("start_epoch"),
             F.least(
                 F.lit(5), F.greatest(F.lit(1), F.expr("duration_sec div 1800"))
             ).alias("num_highlights"),

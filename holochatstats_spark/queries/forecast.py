@@ -310,6 +310,10 @@ def monthly_spine_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from holochatstats_spark.functions.core import round_half_up
 
+    # imported here so temporal's queries keep registering after this
+    # module's (load_all_queries returns registration order)
+    from holochatstats_spark.queries.temporal import _month_spine
+
     o = load_table(spark, sf_dir, "orders")
     src = (
         o.where(F.month("o_orderdate") % 3 != 1)
@@ -319,16 +323,8 @@ def monthly_spine_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("o_totalprice").alias("total"))
     )
-    bounds = o.agg(
-        F.date_trunc("month", F.min("o_orderdate")).alias("mn"),
-        F.date_trunc("month", F.max("o_orderdate")).alias("mx"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 MONTH"))).alias("m")
-    )
-    prios = o.select("o_orderpriority").distinct()
     joined = (
-        spine.crossJoin(F.broadcast(prios))
+        _month_spine(o)
         .join(src, ["o_orderpriority", "m"], "left")
         .withColumn(
             "pos", (F.year("m") * 12 + F.month("m")).cast("double")

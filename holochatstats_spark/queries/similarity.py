@@ -4,9 +4,10 @@ as missing (reference api.py:1013-1056 `/recommend`, api.py:719-731
 `content_clustering`).
 
 Both stay LONG-form end to end (no user×channel pivot — SURVEY §7: A13
-must never materialize wide at 100 TB): the similarity matrix is a
-self-join on the shared key, scores are one more groupBy, and every join's
-small side (norms, vocab, channel counts) is broadcast.
+must never materialize wide at 100 TB): every similarity matrix here
+(V1/V3/V4 types, V2 languages, V6 recommendations) comes from the one
+postings operator operators/cooccur.py:postings_cosine, scores are one
+more groupBy, and every join's small side is broadcast.
 
 Float parity: sums of a handful of doubles can differ across engines in
 summation order; outputs are rounded (2dp scores / 6dp cosines) with
@@ -19,18 +20,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.core import log_dampen, round_half_up
+from holochatstats_spark.operators.cooccur import postings_cosine
 from holochatstats_spark.queries import register
-from holochatstats_spark.queries.textops import _TOKS, _TOKS_DUCK
+from holochatstats_spark.queries.textops import _STOP_SQL, _STOPWORDS, _TOKS, _TOKS_DUCK
 from holochatstats_spark.tables import load_table
 
 PARTICIPATION_EXCLUSION_THRESHOLD = 3  # reference api.py:930
 VOCAB_SIZE = 500  # reference TfidfVectorizer(max_features=500), api.py:722
 
-# TF-IDF stopword list — deliberately tiny and shared with textops; the
-# reference uses sklearn's 318-word english list (documented divergence,
-# SURVEY §2.9 V2: "exact sklearn TF-IDF parity not bit-promised").
-_STOPWORDS = ("the", "a", "and", "of", "to", "in")
-_STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
+
+def _user_type_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user postings ``ms: array<struct<event_type, cnt>>`` — each
+    event_type is a vector over users, weight = the user's event count."""
+    w = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id", "event_type")
+        .agg(F.count("*").cast("double").alias("cnt"))
+    )
+    return w.groupBy("user_id").agg(
+        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -90,56 +99,21 @@ def recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale — per-user postings drive everything, a per-user window for
     top-10.
 
-    r20 shape referenced the per-(user, type) weight table `w` SIX ways
-    (self-join sides, norms, nuc, scores, own), re-deriving the events
-    scan + groupBy each time (60 Exchange / 7 FileScan nodes in the
-    printed plan). r21 cut that to three lineage passes (postings for the
-    matrix, `w` for scores, postings again for the meta join) — and the
-    driver measured 0.68x. r22: the per-user postings are consumed
-    exactly TWICE — once to build the broadcast type×type matrix (ONE
-    double-explode whose diagonal IS the squared norms), once re-exploded
-    to score — and the per-user channel count / own-participation map
-    ride ON the scoring rows, so the separate meta join disappears and
-    the participation-exclusion filter runs BEFORE the score aggregation.
-    The filter commutes with the groupBy: its predicate is a pure function
-    of (user_id, channel) — constant across each group — so it drops
-    whole groups, never individual addends. Both postings consumers share
-    one aggregated subtree (identical exchanges, reused at runtime). Same
-    scores, same threshold filter, same top-10; unchanged DuckDB twin.
-    Guide §2.4/§1.2.
+    The per-user postings are consumed exactly twice, through one shared
+    aggregated subtree (identical exchanges, reused at runtime): once by
+    postings_cosine for the full type×type matrix (upper=False: both
+    directions plus the diagonal — exactly the oracle's w1⋈w2-on-user_id
+    pair set), once re-exploded to score. The per-user channel count and
+    own-participation map ride on the scoring rows, so no meta join is
+    needed and the participation-exclusion filter runs before the score
+    aggregation. That filter commutes with the groupBy: its predicate is
+    a pure function of (user_id, channel), constant across each group, so
+    it drops whole groups, never individual addends.
     """
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    w = ev.groupBy("user_id", "event_type").agg(
-        F.count("*").cast("double").alias("cnt")
-    )
-    peruser = w.groupBy("user_id").agg(
-        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
-    )
-    # full type×type matrix (diagonal included, both directions) — exactly
-    # the r20 w1⋈w2-on-user_id pair set
-    pairs = (
-        peruser.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-    )
-    d = pairs.groupBy(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-    ).agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"))
-    # diagonal windows attach the norms without re-deriving `d`
-    diag = F.max(F.when(F.col("type_a") == F.col("type_b"), F.col("dot")))
-    sims = (
-        d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("type_a"))))
-        .withColumn("nb", F.sqrt(diag.over(Window.partitionBy("type_b"))))
-        .select(
-            "type_a",
-            "type_b",
-            (F.col("dot") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))).alias(
-                "sim"
-            ),
-        )
-    )
+    peruser = _user_type_postings(spark, sf_dir)
+    sims = postings_cosine(peruser, "event_type", "cnt", upper=False)
     exploded = peruser.select(
         "user_id",
         F.size("ms").cast("bigint").alias("n_ch"),
@@ -148,17 +122,15 @@ def recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # null-safe join key: a plain `=` would infer isnotnull(event_type)
     # and push it below the postings aggregation, splitting the two
-    # consumers' subtrees so the runtime stage reuse is lost (guide §4.4
-    # class); event_type is never null, so `<=>` is result-identical
+    # consumers' subtrees so the runtime stage reuse is lost; event_type
+    # is never null, so `<=>` is result-identical
     filtered = (
-        exploded.join(
-            F.broadcast(sims), F.col("a.event_type").eqNullSafe(sims.type_a)
-        )
+        exploded.join(F.broadcast(sims), F.col("a.event_type").eqNullSafe(sims.key_a))
         .where(
-            F.coalesce(F.element_at(F.col("own_cnt"), F.col("type_b")), F.lit(0.0))
+            F.coalesce(F.element_at(F.col("own_cnt"), F.col("key_b")), F.lit(0.0))
             <= PARTICIPATION_EXCLUSION_THRESHOLD
         )
-        .groupBy("user_id", "n_ch", F.col("type_b").alias("channel"))
+        .groupBy("user_id", "n_ch", F.col("key_b").alias("channel"))
         .agg(F.sum("sim").alias("raw_score"))
     )
     w_rank = Window.partitionBy("user_id").orderBy(
@@ -183,6 +155,9 @@ def recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # document tokens (uni+bigrams, stopword-filtered), vocab capped at the
 # top-500 terms by corpus frequency, idf = ln((1+N)/(1+df)) + 1 (smoothed),
 # cosine over the resulting sparse vectors via the V1 long-form self-join.
+# The stopwords are textops' deliberately tiny list; the reference uses
+# sklearn's 318-word english list (documented divergence, SURVEY §2.9 V2:
+# "exact sklearn TF-IDF parity not bit-promised").
 # ---------------------------------------------------------------------------
 @register(
     "tfidf_lang_similarity",
@@ -233,20 +208,15 @@ def tfidf_lang_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocab selection is orderBy().limit() — TakeOrdered over the term
     stats, never a global sort.
 
-    r20 shape recomputed the tokenize→explode→tf lineage SIX ways (vocab,
-    n_docs, wts×3 via the norms read + the dots self-join): 24 FileScan /
-    105 Exchange nodes in the printed plan, and Catalyst re-optimized that
-    whole tree every run. Now the per-term (lang, tf) postings ride along
-    the term-stats aggregate as a collect_list, the 500-term vocab keeps
-    them through the TakeOrdered cap, and dot products AND norms both come
-    from ONE double-explode of the per-term postings (self-pairs a=b are
-    the squared-norm terms; a<b the dots) — the token lineage is built
-    exactly once. Same weights, same cosine contract (6dp round absorbs
-    summation-order drift, same as the cross-engine contract), unchanged
-    DuckDB twin. Guide §2.4/§1.2.
+    The token lineage is built exactly once: each term's (lang, tf)
+    postings ride along the term-stats aggregate as a collect_list, the
+    500-term vocab keeps them through the TakeOrdered cap, and
+    postings_cosine over the idf-weighted term postings yields dots and
+    norms together. The 6dp round absorbs summation-order drift, the same
+    cross-engine contract as every cosine here.
     """
     docs = load_table(spark, sf_dir, "documents").withColumn("t", F.expr(_TOKS))
-    # uni+bigrams in ONE explode (r20 unioned two scans of documents)
+    # uni+bigrams in one explode, so documents is scanned once
     grams = F.expr(
         "concat(t, CASE WHEN size(t) >= 2 THEN "
         "transform(sequence(0, size(t) - 2), i -> concat_ws(' ', t[i], t[i+1])) "
@@ -279,31 +249,12 @@ def tfidf_lang_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("ms")
     )
-    pairs = (
-        weighted.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-        .where(F.col("a.lang") <= F.col("b.lang"))
-    )
-    # one aggregate carries both the dot products (lang_a < lang_b) and the
-    # squared norms (the diagonal lang_a = lang_b); the norms are attached
-    # by two windows over the tiny K×K matrix instead of broadcast joins,
-    # so the `d` lineage is planned (and run) exactly once
-    from pyspark.sql import Window
-
-    d = pairs.groupBy(
-        F.col("a.lang").alias("lang_a"), F.col("b.lang").alias("lang_b")
-    ).agg(F.sum(F.col("a.wt") * F.col("b.wt")).alias("dot"))
-    diag = F.max(F.when(F.col("lang_a") == F.col("lang_b"), F.col("dot")))
     return (
-        d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("lang_a"))))
-        .withColumn("nb", F.sqrt(diag.over(Window.partitionBy("lang_b"))))
-        .where(F.col("lang_a") < F.col("lang_b"))
+        postings_cosine(weighted, "lang", "wt")
         .select(
-            "lang_a",
-            "lang_b",
-            F.round(
-                F.col("dot") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)), 6
-            ).alias("tfidf_cosine"),
+            F.col("key_a").alias("lang_a"),
+            F.col("key_b").alias("lang_b"),
+            F.round("sim", 6).alias("tfidf_cosine"),
         )
         .orderBy("lang_a", "lang_b")
     )
@@ -381,44 +332,14 @@ def _threshold_edges(sims: DataFrame) -> DataFrame:
 
 
 def _type_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise cosine over event-type user vectors (V1 long form).
-
-    Postings shape (same rewrite as type_cosine_similarity): one per-user
-    collect_list, double-explode a≤b, the diagonal of the summed matrix
-    doubles as the squared norms — replaces the r20 w⋈w self-join + norms
-    pass that re-derived the weight lineage four times."""
-    ev = load_table(spark, sf_dir, "events")
-    w = ev.groupBy("user_id", "event_type").agg(
-        F.count("*").cast("double").alias("cnt")
-    )
-    peruser = w.groupBy("user_id").agg(
-        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
-    )
-    pairs = (
-        peruser.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-        .where(F.col("a.event_type") <= F.col("b.event_type"))
-    )
-    from pyspark.sql import Window
-
-    d = pairs.groupBy(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-    ).agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"))
-    diag = F.max(F.when(F.col("type_a") == F.col("type_b"), F.col("dot")))
-    return (
-        d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("type_a"))))
-        .withColumn("nb", F.sqrt(diag.over(Window.partitionBy("type_b"))))
-        .where(F.col("type_a") < F.col("type_b"))
-        .select(
-            "type_a",
-            "type_b",
-            F.round(
-                F.col("dot")
-                / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
+    """Pairwise cosine over event-type user vectors (V1 long form, a<b
+    triangle, 6dp) — type_cosine_similarity's rows, and the input of the
+    V3 edge threshold and V4 clustering."""
+    sims = postings_cosine(_user_type_postings(spark, sf_dir), "event_type", "cnt")
+    return sims.select(
+        F.col("key_a").alias("type_a"),
+        F.col("key_b").alias("type_b"),
+        F.round("sim", 6).alias("cosine_sim"),
     )
 
 

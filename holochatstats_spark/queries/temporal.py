@@ -264,6 +264,23 @@ def user_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _month_spine(o: DataFrame) -> DataFrame:
+    """(m, o_orderpriority) for every month from the first to the last
+    order month × every priority: sequence() over the 1-row min/max
+    aggregate, exploded, cross-joined with the tiny priority dim. Both
+    sides are broadcastable, so the spine adds no shuffle of the fact
+    rows. Shared by monthly_spine_gapfill and forecast's
+    monthly_spine_interp."""
+    bounds = o.agg(
+        F.date_trunc("month", F.min("o_orderdate")).alias("mn"),
+        F.date_trunc("month", F.max("o_orderdate")).alias("mx"),
+    )
+    spine = bounds.select(
+        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 MONTH"))).alias("m")
+    )
+    return spine.crossJoin(F.broadcast(o.select("o_orderpriority").distinct()))
+
+
 # ---------------------------------------------------------------------------
 # V11 — time-spine gap fill (reference month reindex + fillna,
 # forecaster.py:164-176): full month spine × priority, zero-filled.
@@ -296,25 +313,14 @@ def user_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="V11,F8,J8",
 )
 def monthly_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spine = sequence() over the 1-row min/max aggregate, exploded, then
-    cross-joined with the tiny priority dim — both sides broadcastable, so
-    the only shuffle is the monthly aggregate itself."""
+    """Month × priority spine (_month_spine) left-joined to the monthly
+    sums — the only shuffle is the monthly aggregate itself."""
     o = load_table(spark, sf_dir, "orders")
-    bounds = o.agg(
-        F.date_trunc("month", F.min("o_orderdate")).alias("mn"),
-        F.date_trunc("month", F.max("o_orderdate")).alias("mx"),
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("mn", "mx", F.expr("INTERVAL 1 MONTH"))
-        ).alias("m")
-    )
-    prios = o.select("o_orderpriority").distinct()
     sums = o.groupBy(
         "o_orderpriority", F.date_trunc("month", F.col("o_orderdate")).alias("m")
     ).agg(F.sum("o_totalprice").alias("s"), F.count("*").alias("n"))
     return (
-        spine.crossJoin(F.broadcast(prios))
+        _month_spine(o)
         .join(sums, ["o_orderpriority", "m"], "left")
         .select(
             "o_orderpriority",

@@ -11,9 +11,9 @@ Scale notes: the brute-force k-NN broadcasts the (tiny) query side and is
 a single scan + TakeOrdered — the right baseline at any corpus size that
 fits a scan budget; the LSH-bucketed variant (operators/ann.py, exercised
 by queries/neardup.py:embedding_neardup_lsh) is the 100 TB path. The V1
-similarity self-join stays LONG (never pivots to a user×key matrix, unlike
-the reference's pandas pivot api.py:462-467) and shuffles once on the
-join key.
+similarity (operators/cooccur.py:postings_cosine) stays LONG — it never
+pivots to a user×key matrix, unlike the reference's pandas pivot
+api.py:462-467.
 """
 
 from __future__ import annotations
@@ -115,52 +115,17 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def type_cosine_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never materializes the wide user×type matrix (SURVEY §7: A13 must
-    stay long at 100 TB) — all pairs come from each user's postings list.
-
-    r20 ran a w⋈w self-join on user_id plus a separate norms pass — the
-    per-(type, user) weight lineage appeared four times (33 Exchange / 4
-    FileScan nodes). Now one per-user collect_list feeds a double-explode
-    (a.type ≤ b.type): the diagonal of the resulting type×type sum IS the
-    squared norms, so ONE aggregate yields both dots and norms. Per-user
-    fanout is bounded by #types, same as the join. Same rounded cosines,
-    unchanged DuckDB twin. Guide §2.4/§1.2.
+    """The a<b triangle of operators/cooccur.postings_cosine over per-user
+    postings (queries/similarity._type_sims), ordered. Never materializes
+    the wide user×type matrix (SURVEY §7: A13 must stay long at 100 TB);
+    per-user fanout is bounded by #types, same as the oracle's self-join.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = ev.groupBy("event_type", "user_id").agg(
-        F.count("*").cast("double").alias("cnt")
-    )
-    peruser = w.groupBy("user_id").agg(
-        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
-    )
-    pairs = (
-        peruser.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-        .where(F.col("a.event_type") <= F.col("b.event_type"))
-    )
-    from pyspark.sql import Window
+    # imported here, not at module top, so similarity's queries keep
+    # registering after this module's (load_all_queries returns
+    # registration order)
+    from holochatstats_spark.queries.similarity import _type_sims
 
-    d = pairs.groupBy(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-    ).agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"))
-    # norms attached via diagonal windows over the tiny K×K matrix — the
-    # `d` lineage is planned and run exactly once (no norms re-derivation)
-    diag = F.max(F.when(F.col("type_a") == F.col("type_b"), F.col("dot")))
-    return (
-        d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("type_a"))))
-        .withColumn("nb", F.sqrt(diag.over(Window.partitionBy("type_b"))))
-        .where(F.col("type_a") < F.col("type_b"))
-        .select(
-            "type_a",
-            "type_b",
-            F.round(
-                F.col("dot") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy("type_a", "type_b")
-    )
+    return _type_sims(spark, sf_dir).orderBy("type_a", "type_b")
 
 
 # ---------------------------------------------------------------------------

@@ -35,18 +35,22 @@ MESSAGE_SCHEMA = T.StructType(
 )
 
 
+def with_video_ts(df: DataFrame) -> DataFrame:
+    """The bronze projection shared by the batch and streaming readers:
+    video_id from the <video_id>.jsonl[.gz] file name (the reference keys
+    the cache by file name), timestamp µs → TimestampType ts (F13)."""
+    return df.withColumn(
+        "video_id",
+        F.regexp_extract(F.input_file_name(), r"([^/]+?)\.jsonl(\.gz)?$", 1),
+    ).withColumn("ts", F.timestamp_micros(F.col("timestamp")))
+
+
 def read_chat_logs(
     spark: SparkSession, path: str, channel_id: str | None = None
 ) -> DataFrame:
     """Read <video_id>.jsonl[.gz] files under ``path`` into the messages
-    bronze frame: video_id derived from the file name (the reference keys
-    the cache by file name), timestamp converted µs → TimestampType (F13).
-    """
-    df = spark.read.schema(MESSAGE_SCHEMA).json(path)
-    df = df.withColumn(
-        "video_id",
-        F.regexp_extract(F.input_file_name(), r"([^/]+?)\.jsonl(\.gz)?$", 1),
-    ).withColumn("ts", F.timestamp_micros(F.col("timestamp")))
+    bronze frame (with_video_ts), tagged with ``channel_id`` if given."""
+    df = with_video_ts(spark.read.schema(MESSAGE_SCHEMA).json(path))
     if channel_id is not None:
         df = df.withColumn("channel_id", F.lit(channel_id))
     return df

@@ -17,8 +17,10 @@ Design:
 
 At scale this runs continuously against the landing zone with checkpoint
 state in the stream's checkpointLocation; the batch path (operators/
-ingest.py) remains the rebuild/backfill path — both produce the same
-silver rows by construction.
+ingest.py) remains the rebuild/backfill path. Both produce the same
+silver counters by construction: they read through one video_id/ts
+projection (sources/chat_logs.with_video_ts) and aggregate one counter
+list (operators/ingest.message_counters).
 """
 
 from __future__ import annotations
@@ -26,22 +28,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from holochatstats_spark.operators.ingest import MEMBER_EVENT_TYPES, classify_messages
-from holochatstats_spark.functions.classify import COUNTED_CATEGORIES
-from holochatstats_spark.sources.chat_logs import MESSAGE_SCHEMA
+from holochatstats_spark.operators.ingest import classify_messages, message_counters
+from holochatstats_spark.sources.chat_logs import MESSAGE_SCHEMA, with_video_ts
 
 
 def stream_messages(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming twin of sources/chat_logs.read_chat_logs."""
-    df = (
+    """Streaming twin of sources/chat_logs.read_chat_logs: same schema,
+    same video_id/ts projection."""
+    return with_video_ts(
         spark.readStream.schema(MESSAGE_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .json(path)
     )
-    return df.withColumn(
-        "video_id",
-        F.regexp_extract(F.input_file_name(), r"([^/]+?)\.jsonl(\.gz)?$", 1),
-    ).withColumn("ts", F.timestamp_micros(F.col("timestamp")))
 
 
 def stream_user_counters(
@@ -51,35 +49,20 @@ def stream_user_counters(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Windowed streaming A1 counters: per (window, channel, video, user)
-    category counts + total + last message ts. Summing across windows
-    reproduces the batch counters exactly (associative aggregates only —
-    the order-sensitive rank/username selection stays in the batch
-    rebuild, which is the system of record for those columns)."""
+    the batch counter list (operators/ingest.message_counters) plus the
+    last message ts. Summing across windows reproduces the batch counters
+    exactly (associative aggregates only — the order-sensitive
+    rank/username selection stays in the batch rebuild, which is the
+    system of record for those columns)."""
     msgs = classify_messages(
         messages.withColumn("channel_id", F.lit(channel_id))
     ).withWatermark("ts", watermark)
-    is_member_event = F.col("message_type").isin(*MEMBER_EVENT_TYPES)
-    is_counted = (~is_member_event) & F.col("message_category").isNotNull()
-    cat_counters = [
-        F.sum(
-            F.when(is_counted & (F.col("message_category") == c), 1).otherwise(0)
-        )
-        .cast("int")
-        .alias(f"{c}_count")
-        for c in COUNTED_CATEGORIES
-    ]
     return msgs.groupBy(
         F.window("ts", window_duration),
         "channel_id",
         "video_id",
         "user_id",
-    ).agg(
-        *cat_counters,
-        F.sum(F.when(is_counted, 1).otherwise(0))
-        .cast("int")
-        .alias("total_message_count"),
-        F.max("ts").alias("last_message_at"),
-    )
+    ).agg(*message_counters(), F.max("ts").alias("last_message_at"))
 
 
 def stream_running_user_totals(messages: DataFrame) -> DataFrame:
