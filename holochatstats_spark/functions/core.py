@@ -14,6 +14,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a SQL string literal that Spark and DuckDB read alike
+    (quotes doubled). A backslash is refused: Spark SQL unescapes it unless
+    ``spark.sql.parser.escapedStringLiterals`` is set, DuckDB never does,
+    so such a literal stays a Column literal."""
+    if "\\" in s:
+        raise ValueError(f"backslash in a SQL-text literal: {s!r}")
+    return "'" + s.replace("'", "''") + "'"
+
+
 def month_str(ts: Column) -> Column:
     """F6: month bucket as a sortable 'yyyy-MM' string (UTC session TZ)."""
     return F.date_format(ts, "yyyy-MM")
@@ -45,6 +55,12 @@ def round_half_up(c: Column, scale: int) -> Column:
     """
     p = 10**scale
     return F.floor(c.cast("double") * p + F.lit(0.5)) / p
+
+
+def round_half_up_sql(expr: str, scale: int) -> str:
+    """:func:`round_half_up` over a SQL-text expression, as SQL text."""
+    p = 10**scale
+    return f"FLOOR(CAST({expr} AS DOUBLE) * {p} + 0.5D) / {p}"
 
 
 def pct_round(num: Column, den: Column, scale: int = 2) -> Column:

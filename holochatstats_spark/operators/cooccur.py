@@ -10,7 +10,7 @@ long at 100 TB).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,22 +33,16 @@ def postings_cosine(
     whose weights are all 0 has norm 0 and gets a NULL sim (nullif in the
     denominator), never a division error or NaN.
     """
-    pairs = postings.select(F.col("ms"), F.explode("ms").alias("a")).select(
-        F.col("a"), F.explode("ms").alias("b")
+    pairs = postings.selectExpr("ms", "explode(ms) AS a").selectExpr("a", "explode(ms) AS b")
+    if upper:
+        pairs = pairs.where(f"a.{key} <= b.{key}")
+    d = pairs.groupBy(F.expr(f"a.{key} AS key_a"), F.expr(f"b.{key} AS key_b")).agg(
+        F.expr(f"sum(a.{weight} * b.{weight}) AS dot")
+    )
+    diag = "max(CASE WHEN key_a = key_b THEN dot END)"
+    sims = d.withColumn("na", F.expr(f"sqrt({diag} OVER (PARTITION BY key_a))")).withColumn(
+        "nb", F.expr(f"sqrt({diag} OVER (PARTITION BY key_b))")
     )
     if upper:
-        pairs = pairs.where(F.col(f"a.{key}") <= F.col(f"b.{key}"))
-    d = pairs.groupBy(
-        F.col(f"a.{key}").alias("key_a"), F.col(f"b.{key}").alias("key_b")
-    ).agg(F.sum(F.col(f"a.{weight}") * F.col(f"b.{weight}")).alias("dot"))
-    diag = F.max(F.when(F.col("key_a") == F.col("key_b"), F.col("dot")))
-    sims = d.withColumn(
-        "na", F.sqrt(diag.over(Window.partitionBy("key_a")))
-    ).withColumn("nb", F.sqrt(diag.over(Window.partitionBy("key_b"))))
-    if upper:
-        sims = sims.where(F.col("key_a") < F.col("key_b"))
-    return sims.select(
-        "key_a",
-        "key_b",
-        (F.col("dot") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))).alias("sim"),
-    )
+        sims = sims.where("key_a < key_b")
+    return sims.selectExpr("key_a", "key_b", "dot / nullif(na * nb, 0.0D) AS sim")

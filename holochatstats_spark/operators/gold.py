@@ -86,9 +86,7 @@ def membership_summary(user_data: DataFrame, channels: DataFrame) -> DataFrame:
     percent-of-total (A8/W3).
     """
     rank_class = (
-        F.when(F.col("membership_rank") >= 0, 0)
-        .when(F.col("membership_rank") == -2, 1)
-        .otherwise(2)
+        "CASE WHEN membership_rank >= 0 THEN 0 WHEN membership_rank = -2 THEN 1 ELSE 2 END"
     )
     # The W1 "latest row per (user, channel, month)" pick only needs the
     # winner's membership_rank, and its ordering — rank_class ASC,
@@ -103,23 +101,15 @@ def membership_summary(user_data: DataFrame, channels: DataFrame) -> DataFrame:
     # video_id stays the deterministic tie-break: two same-class rows of
     # one user can share last_message_at across videos; the pick must not
     # depend on partition order (oracle hash parity).
-    order_key = F.struct(
-        (-rank_class).alias("neg_class"),
-        F.col("last_message_at"),
-        F.col("video_id"),
-    )
+    order_key = f"struct(-({rank_class}) AS neg_class, last_message_at, video_id)"
     latest = (
-        user_data.withColumn(
-            "observed_month_", F.trunc(F.col("last_message_at"), "MM")
-        )
+        user_data.withColumn("observed_month_", F.expr("trunc(last_message_at, 'MM')"))
         .groupBy("user_id", "channel_id", "observed_month_")
-        .agg(F.max_by("membership_rank", order_key).alias("membership_rank"))
+        .agg(F.expr(f"max_by(membership_rank, {order_key}) AS membership_rank"))
     )
     counts = latest.groupBy(
-        "channel_id",
-        F.col("observed_month_").alias("observed_month"),
-        "membership_rank",
-    ).agg(F.count("*").cast("long").alias("membership_count"))
+        "channel_id", F.expr("observed_month_ AS observed_month"), "membership_rank"
+    ).agg(F.expr("CAST(count(*) AS BIGINT) AS membership_count"))
     w_tot = Window.partitionBy("channel_id", "observed_month")
     return (
         counts.withColumn(

@@ -29,13 +29,14 @@ Semantics reproduced (and where they differ, why):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.classify import (
     COUNTED_CATEGORIES,
     categorize_message,
 )
+from holochatstats_spark.functions.core import sql_str
 
 MEMBER_EVENT_TYPES = ("new_member", "gift_member")
 
@@ -54,23 +55,28 @@ def classify_messages(messages: DataFrame) -> DataFrame:
     )
 
 
+_MEMBER_EVENTS_SQL = ", ".join(map(sql_str, MEMBER_EVENT_TYPES))
+_IS_COUNTED = (
+    f"NOT (message_type IN ({_MEMBER_EVENTS_SQL})) AND message_category IS NOT NULL"
+)
+_MESSAGE_COUNTERS_SQL = tuple(
+    f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS INT) AS {name}"
+    for cond, name in [
+        (f"({_IS_COUNTED}) AND message_category = {sql_str(c)}", f"{c}_count")
+        for c in COUNTED_CATEGORIES
+    ]
+    + [(_IS_COUNTED, "total_message_count")]
+)
+
+
 def message_counters() -> list[Column]:
     """The A1 message counters, one aggregate per COUNTED_CATEGORIES entry
     plus total_message_count. A row counts iff it is not a membership
     event and its category survived classification. build_user_data and
     the streaming stream_user_counters both aggregate with this one list,
     so the stream's window rollup equals the batch silver counters by
-    construction."""
-    is_member_event = F.col("message_type").isin(*MEMBER_EVENT_TYPES)
-    is_counted = ~is_member_event & F.col("message_category").isNotNull()
-
-    def count_where(cond: Column, name: str) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("int").alias(name)
-
-    return [
-        count_where(is_counted & (F.col("message_category") == c), f"{c}_count")
-        for c in COUNTED_CATEGORIES
-    ] + [count_where(is_counted, "total_message_count")]
+    construction. Each counter is one SQL expression."""
+    return [F.expr(e) for e in _MESSAGE_COUNTERS_SQL]
 
 
 def build_user_data(
@@ -88,54 +94,46 @@ def build_user_data(
     if "seq" not in msgs.columns:
         msgs = msgs.withColumn("seq", F.lit(0).cast("long"))
 
-    is_member_event = F.col("message_type").isin(*MEMBER_EVENT_TYPES)
     # rank is "known" unless NULL (no badge parsed — not rank-bearing) or a
     # badge-less gift event (rank -2); a NULL-rank chat message must not
     # shadow an earlier known rank (ADVICE r1: the bare coalesce collapsed
     # that case to -2)
-    has_known_rank = F.col("membership_rank").isNotNull() & (
-        (~is_member_event) | (F.col("membership_rank") != -2)
+    has_known_rank = (
+        f"membership_rank IS NOT NULL AND (NOT (message_type IN ({_MEMBER_EVENTS_SQL}))"
+        " OR membership_rank != -2)"
     )
-    order_key = F.struct(F.col("ts"), F.col("seq"))
-
+    order_key = "struct(ts, seq)"
     per_user = (
         msgs.groupBy("channel_id", "video_id", "user_id")
         .agg(
-            F.max_by("username", order_key).alias("username"),
-            F.max("ts").alias("last_message_at"),
+            F.expr(f"max_by(username, {order_key}) AS username"),
+            F.expr("max(ts) AS last_message_at"),
             *message_counters(),
-            F.coalesce(
-                F.max_by(
-                    F.when(has_known_rank, F.col("membership_rank")),
-                    F.when(has_known_rank, order_key),
-                ),
-                F.lit(-2),
-            )
-            .cast("int")
-            .alias("membership_rank"),
-            (
-                F.max((F.col("message_type") == "gift_member").cast("int")) == 1
-            ).alias("has_gift_event"),
-            (F.max(has_known_rank.cast("int")) == 0).alias("no_known_rank"),
+            F.expr(
+                f"CAST(coalesce(max_by(CASE WHEN {has_known_rank} THEN membership_rank END,"
+                f" CASE WHEN {has_known_rank} THEN {order_key} END), -2) AS INT)"
+                " AS membership_rank"
+            ),
+            F.expr("max(CAST(message_type = 'gift_member' AS INT)) = 1 AS has_gift_event"),
+            F.expr(f"max(CAST({has_known_rank} AS INT)) = 0 AS no_known_rank"),
         )
-        .withColumn("is_gift", F.col("has_gift_event") & F.col("no_known_rank"))
+        .withColumn("is_gift", F.expr("has_gift_event AND no_known_rank"))
         .drop("has_gift_event", "no_known_rank")
     )
 
     # observed_month: month of the video's LAST message (any user) —
     # window over the per-user aggregate (cardinality = users/video), not
     # the raw messages.
-    w_video = Window.partitionBy("channel_id", "video_id")
     per_user = per_user.withColumn(
         "observed_month",
-        F.trunc(F.max("last_message_at").over(w_video), "MM"),
+        F.expr("trunc(max(last_message_at) OVER (PARTITION BY channel_id, video_id), 'MM')"),
     )
     if default_year is not None and default_month is not None:
         per_user = per_user.withColumn(
             "observed_month",
-            F.coalesce(
-                F.col("observed_month"),
-                F.lit(f"{default_year:04d}-{default_month:02d}-01").cast("date"),
+            F.expr(
+                "coalesce(observed_month,"
+                f" CAST('{default_year:04d}-{default_month:02d}-01' AS DATE))"
             ),
         )
     return per_user

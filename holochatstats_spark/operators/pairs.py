@@ -44,8 +44,6 @@ downstream exactly as before.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,13 +70,12 @@ def bucket_pairs(
     ``a.<id_field> < b.<id_field>``); pairs occurring in several buckets
     appear once per bucket, as with the plain double-explode.
     """
-    mid = F.col(f"{member_col}.{id_field}")
     chunked = (
         bands.withColumn(
-            "_chunk", F.pmod(F.xxhash64(mid), F.lit(n_chunks)).cast("int")
+            "_chunk", F.expr(f"CAST(pmod(xxhash64({member_col}.{id_field}), {n_chunks}) AS INT)")
         )
         .groupBy(*key_cols, "_chunk")
-        .agg(F.collect_list(member_col).alias("_ms"))
+        .agg(F.expr(f"collect_list({member_col}) AS _ms"))
     )
     # Null-safe equality on the bucket keys, deliberately: a plain `=` makes
     # the inner join infer `isnotnull(key)` filters, and because the keys
@@ -87,11 +84,7 @@ def bucket_pairs(
     # r20 4x-ArrowEvalPython bug class). Bucket keys are never null by
     # construction (band indexes from posexplode, band values from bit ops /
     # concat_ws over non-null inputs), so `<=>` is result-identical to `=`.
-    cond = reduce(
-        lambda x, y: x & y,
-        [F.col(f"_pa.{c}").eqNullSafe(F.col(f"_pb.{c}")) for c in key_cols]
-        + [F.col("_pa._chunk") <= F.col("_pb._chunk")],
-    )
+    cond = " AND ".join([f"_pa.{c} <=> _pb.{c}" for c in key_cols] + ["_pa._chunk <= _pb._chunk"])
     joined = (
         # Force a shuffle join (guide §3.1, deliberately): the chunked frame
         # has per-bucket cardinality, so broadcasting it is the r20
@@ -103,24 +96,16 @@ def bucket_pairs(
         # AQE can split (guide §2.5).
         chunked.alias("_pa")
         .hint("shuffle_merge")
-        .join(chunked.alias("_pb"), cond)
-        .select(
-            F.col("_pa._chunk").alias("_ca"),
-            F.col("_pb._chunk").alias("_cb"),
-            F.col("_pa._ms").alias("_msa"),
-            F.col("_pb._ms").alias("_msb"),
-        )
+        .join(chunked.alias("_pb"), F.expr(cond))
+        .selectExpr("_pa._chunk AS _ca", "_pb._chunk AS _cb", "_pa._ms AS _msa", "_pb._ms AS _msb")
         # a same-chunk singleton can only pair with itself — drop before
         # exploding (the common case: most buckets have one member)
-        .where((F.col("_ca") != F.col("_cb")) | (F.size("_msa") >= 2))
+        .where("_ca != _cb OR size(_msa) >= 2")
     )
-    pairs = (
-        joined.select("_ca", "_cb", "_msb", F.explode("_msa").alias("_x"))
-        .select("_ca", "_cb", "_x", F.explode("_msb").alias("_y"))
+    pairs = joined.selectExpr("_ca", "_cb", "_msb", "explode(_msa) AS _x").selectExpr(
+        "_ca", "_cb", "_x", "explode(_msb) AS _y"
     )
-    xid, yid = F.col(f"_x.{id_field}"), F.col(f"_y.{id_field}")
-    lt = xid < yid
-    return pairs.where((F.col("_ca") < F.col("_cb")) | lt).select(
-        F.when(lt, F.col("_x")).otherwise(F.col("_y")).alias("a"),
-        F.when(lt, F.col("_y")).otherwise(F.col("_x")).alias("b"),
+    lt = f"_x.{id_field} < _y.{id_field}"
+    return pairs.where(f"_ca < _cb OR {lt}").selectExpr(
+        f"CASE WHEN {lt} THEN _x ELSE _y END AS a", f"CASE WHEN {lt} THEN _y ELSE _x END AS b"
     )

@@ -22,8 +22,9 @@ the identity on it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from holochatstats_spark.functions.core import sql_str
 
 # (message text, F1 category) — index = event_id % 16
 MESSAGES: tuple[tuple[str, str | None], ...] = (
@@ -81,16 +82,22 @@ BURST_REM = 3
 BURST_SIZE = 12
 
 
-def _sql_lit(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
+def _items(values) -> str:
+    """Comma-separated SQL literals, read alike by Spark and DuckDB."""
+    return ", ".join(
+        "CAST(NULL AS STRING)" if v is None else sql_str(v) if isinstance(v, str) else str(v)
+        for v in values
+    )
 
 
-_MSG_LIST = "[" + ", ".join(_sql_lit(m) for m, _ in MESSAGES) + "]"
-_CAT_LIST = (
-    "[" + ", ".join("NULL" if c is None else _sql_lit(c) for _, c in MESSAGES) + "]"
-)
-_BADGE_LIST = "[" + ", ".join(_sql_lit(b) for b, _ in BADGES) + "]"
-_RANK_LIST = "[" + ", ".join(str(r) for _, r in BADGES) + "]"
+_MSG_ITEMS = _items(m for m, _ in MESSAGES)
+_CAT_ITEMS = _items(c for _, c in MESSAGES)
+_BADGE_ITEMS = _items(b for b, _ in BADGES)
+_RANK_ITEMS = _items(r for _, r in BADGES)
+_MSG_LIST = f"[{_MSG_ITEMS}]"
+_CAT_LIST = f"[{_CAT_ITEMS}]"
+_BADGE_LIST = f"[{_BADGE_ITEMS}]"
+_RANK_LIST = f"[{_RANK_ITEMS}]"
 
 #: DuckDB CTE body producing the identical messages frame (one "video" per
 #: (channel, day); gift events are badge-less → rank -2, mirroring
@@ -129,94 +136,74 @@ SYNTH_MESSAGES_SQL = f"""
     WHERE event_id % {BURST_MOD} = {BURST_REM}
 """
 
-#: Synthetic channels dimension (channel per event_type).
-SYNTH_CHANNELS_SQL = """
-    SELECT DISTINCT event_type AS channel_id,
-           'ch ' || event_type AS channel_name,
-           CASE WHEN event_type IN ('click', 'view') THEN 'groupA'
-                ELSE 'groupB' END AS channel_group
+#: event_types whose synthetic channel is in groupA; every other is groupB.
+GROUP_A_EVENT_TYPES = ("click", "view")
+
+#: Synthetic channels dimension (channel per event_type): one select list,
+#: valid in both engines' SQL, over the distinct event types.
+SYNTH_CHANNEL_COLUMNS = (
+    "event_type AS channel_id",
+    "'ch ' || event_type AS channel_name",
+    f"CASE WHEN event_type IN ({_items(GROUP_A_EVENT_TYPES)}) THEN 'groupA'"
+    " ELSE 'groupB' END AS channel_group",
+)
+SYNTH_CHANNELS_SQL = f"""
+    SELECT DISTINCT {", ".join(SYNTH_CHANNEL_COLUMNS)}
     FROM events
 """
+
+# The Spark twin of SYNTH_MESSAGES_SQL as SQL text over the exploded
+# (event_id, user_id, event_type, ts, i) rows, built from the same pools.
+_BURST_ROW = "NOT (i = 0)"
+_SPARK_BURST_ROWS = (
+    f"explode(sequence(0, CASE WHEN event_id % {BURST_MOD} = {BURST_REM}"
+    f" THEN {BURST_SIZE} ELSE 0 END)) AS i"
+)
+
+
+def _spark_pick(items: str, mod: int) -> str:
+    return f"element_at(array({items}), CAST(event_id % {mod} AS INT) + 1)"
+
+
+_SPARK_MESSAGE_COLUMNS = (
+    "event_type AS channel_id",
+    "concat(event_type, '_', date_format(ts, 'yyyy-MM-dd')) AS video_id",
+    "concat('u', user_id) AS user_id",
+    "concat('user ', user_id) AS username",
+    "ts",
+    f"CASE WHEN i = 0 THEN event_id"
+    f" ELSE -(event_id * {BURST_SIZE} + CAST(i - 1 AS BIGINT) + 1) END AS seq",
+    f"CASE WHEN {_BURST_ROW} THEN 'new_member' WHEN event_id % 20 = 0 THEN 'gift_member'"
+    " WHEN event_id % 20 = 1 THEN 'new_member' WHEN event_id % 20 = 2 THEN 'paid_message'"
+    " ELSE 'chat' END AS message_type",
+    f"CASE WHEN {_BURST_ROW} OR event_id % 20 = 0 THEN CAST(NULL AS STRING)"
+    f" ELSE {_spark_pick(_BADGE_ITEMS, N_BADGE)} END AS badge_text",
+    f"CAST(CASE WHEN {_BURST_ROW} OR event_id % 20 = 0 THEN -2"
+    f" ELSE {_spark_pick(_RANK_ITEMS, N_BADGE)} END AS INT) AS membership_rank",
+    f"CASE WHEN {_BURST_ROW} OR event_id % 20 IN (0, 1) THEN CAST(NULL AS STRING)"
+    f" ELSE {_spark_pick(_CAT_ITEMS, N_MSG)} END AS message_category",
+    f"CASE WHEN i = 0 THEN {_spark_pick(_MSG_ITEMS, N_MSG)} ELSE '' END AS message",
+)
 
 
 def synthetic_messages(events: DataFrame) -> DataFrame:
     """The Spark twin of SYNTH_MESSAGES_SQL (expects load_table's events).
 
-    ONE scan (guide §1.2): the r20 shape was a UNION ALL of two events
-    scans (parent rows + the filtered burst branch) — every consumer of
-    the messages frame paid the file twice. Now each event explodes into
-    1 + (BURST_SIZE if selected else 0) rows in a single pass: i = 0 is
-    the parent row, i ≥ 1 the i-th burst row. Row set is identical to the
-    SQL twin's UNION ALL (row order differs; no consumer is
-    order-sensitive before its own ORDER BY / aggregate).
+    One scan: each event explodes into 1 + (BURST_SIZE if selected else 0)
+    rows in a single pass, i = 0 the parent row and i >= 1 the i-th burst
+    row. The row set equals the SQL twin's UNION ALL (row order differs;
+    no consumer is order-sensitive before its own ORDER BY / aggregate).
+    The columns are SQL text, one expression each, so building the frame
+    costs a few JVM calls instead of one per Column operation.
     """
-    eid = F.col("event_id")
-    i = F.col("i")
-    is_parent = i == 0
-
-    def _pick(pool: list[Column], mod: int) -> Column:
-        return F.element_at(F.array(*pool), (eid % mod).cast("int") + 1)
-
-    msg_arr = [F.lit(m) for m, _ in MESSAGES]
-    cat_arr = [
-        F.lit(None).cast("string") if c is None else F.lit(c) for _, c in MESSAGES
-    ]
-    badge_arr = [F.lit(b) for b, _ in BADGES]
-    rank_arr = [F.lit(r) for _, r in BADGES]
-
-    n_rows = F.when(
-        eid % BURST_MOD == BURST_REM, F.lit(BURST_SIZE)
-    ).otherwise(F.lit(0))
-    return events.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "ts",
-        F.explode(F.sequence(F.lit(0), n_rows)).alias("i"),
-    ).select(
-        F.col("event_type").alias("channel_id"),
-        F.concat(
-            F.col("event_type"), F.lit("_"), F.date_format("ts", "yyyy-MM-dd")
-        ).alias("video_id"),
-        F.concat(F.lit("u"), F.col("user_id")).alias("user_id"),
-        F.concat(F.lit("user "), F.col("user_id")).alias("username"),
-        F.col("ts"),
-        F.when(is_parent, eid)
-        .otherwise(-(eid * BURST_SIZE + (i - 1).cast("long") + 1))
-        .alias("seq"),
-        F.when(~is_parent, "new_member")
-        .when(eid % 20 == 0, "gift_member")
-        .when(eid % 20 == 1, "new_member")
-        .when(eid % 20 == 2, "paid_message")
-        .otherwise("chat")
-        .alias("message_type"),
-        F.when(~is_parent | (eid % 20 == 0), F.lit(None).cast("string"))
-        .otherwise(_pick(badge_arr, N_BADGE))
-        .alias("badge_text"),
-        F.when(~is_parent | (eid % 20 == 0), F.lit(-2))
-        .otherwise(_pick(rank_arr, N_BADGE))
-        .cast("int")
-        .alias("membership_rank"),
-        F.when(~is_parent | (eid % 20).isin(0, 1), F.lit(None).cast("string"))
-        .otherwise(_pick(cat_arr, N_MSG))
-        .alias("message_category"),
-        F.when(is_parent, _pick(msg_arr, N_MSG)).otherwise("").alias("message"),
-    )
+    return events.selectExpr(
+        "event_id", "user_id", "event_type", "ts", _SPARK_BURST_ROWS
+    ).selectExpr(*_SPARK_MESSAGE_COLUMNS)
 
 
 def synthetic_channels(events: DataFrame) -> DataFrame:
     """The Spark twin of SYNTH_CHANNELS_SQL."""
-    return (
-        events.select("event_type")
-        .distinct()
-        .select(
-            F.col("event_type").alias("channel_id"),
-            F.concat(F.lit("ch "), F.col("event_type")).alias("channel_name"),
-            F.when(F.col("event_type").isin("click", "view"), "groupA")
-            .otherwise("groupB")
-            .alias("channel_group"),
-        )
-    )
+    return events.select("event_type").distinct().selectExpr(*SYNTH_CHANNEL_COLUMNS)
 
 
 #: DuckDB twin of operators/ingest.build_user_data over the synth messages

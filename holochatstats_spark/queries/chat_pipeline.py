@@ -357,18 +357,20 @@ _VIDEO_STATS_SQL = """
 """
 
 
-def _video_span(last: Column, first: Column) -> list[Column]:
+_OVER_VIDEO = "OVER (PARTITION BY channel_id, video_id)"
+
+
+def _video_span(last: str, first: str) -> list[Column]:
     """end_epoch / duration_sec (+30 s pad) of a video from its last and
-    first message epochs — the one Spark definition of the span math
-    _VIDEO_STATS_SQL states for the oracle."""
-    return [last.alias("end_epoch"), (last - first + 30).alias("duration_sec")]
+    first message epochs (SQL text) — the one Spark definition of the span
+    math _VIDEO_STATS_SQL states for the oracle."""
+    return [F.expr(f"{last} AS end_epoch"), F.expr(f"{last} - {first} + 30 AS duration_sec")]
 
 
 def _video_stats(msgs: DataFrame) -> DataFrame:
     """Spark twin of _VIDEO_STATS_SQL: one row per (channel, video)."""
-    epoch = F.unix_timestamp("ts")
     return msgs.groupBy("channel_id", "video_id").agg(
-        *_video_span(F.max(epoch), F.min(epoch))
+        *_video_span("max(unix_timestamp(ts))", "min(unix_timestamp(ts))")
     )
 
 
@@ -378,8 +380,7 @@ def _bucket_video_span() -> list[Column]:
     partitioned by (channel, video) read the span off that partitioning
     instead of a second aggregate + join-back. The max of the bucket
     maxima is the per-video MAX(ts), so the values equal _video_stats'."""
-    w_v = Window.partitionBy("channel_id", "video_id")
-    return _video_span(F.max("mx").over(w_v), F.min("mn").over(w_v))
+    return _video_span(f"max(mx) {_OVER_VIDEO}", f"min(mn) {_OVER_VIDEO}")
 
 
 @register(
@@ -912,63 +913,54 @@ def velocity_bursts_from(msgs: DataFrame, channels: DataFrame) -> DataFrame:
     eligible/safe-zone/num_highlights math is unchanged row for row.
     Per-video window state is bounded by a video's duration in seconds.
     """
-    epoch = F.unix_timestamp("ts")
-    persec = msgs.groupBy("channel_id", "video_id", epoch.alias("sec")).agg(
-        F.count("*").alias("cnt")
+    persec = msgs.groupBy("channel_id", "video_id", F.expr("unix_timestamp(ts) AS sec")).agg(
+        F.expr("count(*) AS cnt")
     )
-    w_v = Window.partitionBy("channel_id", "video_id")
     stats = persec.select(
         "channel_id",
         "video_id",
         "sec",
         "cnt",
-        *_video_span(F.max("sec").over(w_v), F.min("sec").over(w_v)),
+        *_video_span(f"max(sec) {_OVER_VIDEO}", f"min(sec) {_OVER_VIDEO}"),
     )
-    start_epoch = F.col("end_epoch") - F.col("duration_sec")
-    elapsed = F.col("sec") - start_epoch
+    start_epoch = "end_epoch - duration_sec"
+    elapsed = f"sec - ({start_epoch})"
     # start_epoch and num_highlights are constant per (channel, video):
     # they ride through the bucket aggregate (max of a constant) instead
     # of a join back to per-video stats after it
     safe = (
-        stats.where(F.col("duration_sec") >= 600)
+        stats.where("duration_sec >= 600")
         .where(
-            (elapsed >= 0.05 * F.col("duration_sec").cast("double"))
-            & (elapsed <= 0.95 * F.col("duration_sec").cast("double"))
+            f"{elapsed} >= CAST(duration_sec AS DOUBLE) * 0.05D"
+            f" AND {elapsed} <= CAST(duration_sec AS DOUBLE) * 0.95D"
         )
-        .select(
+        .selectExpr(
             "channel_id",
             "video_id",
-            elapsed.alias("elapsed"),
+            f"{elapsed} AS elapsed",
             "cnt",
-            start_epoch.alias("start_epoch"),
-            F.least(
-                F.lit(5), F.greatest(F.lit(1), F.expr("duration_sec div 1800"))
-            ).alias("num_highlights"),
+            f"{start_epoch} AS start_epoch",
+            "least(5, greatest(1, duration_sec div 1800)) AS num_highlights",
         )
     )
-    activity = safe.groupBy(
-        "channel_id", "video_id", F.expr("elapsed div 15").alias("bucket")
-    ).agg(
-        F.sum("cnt").cast("bigint").alias("n_msgs"),
-        F.max("start_epoch").alias("start_epoch"),
-        F.max("num_highlights").alias("num_highlights"),
+    activity = safe.groupBy("channel_id", "video_id", F.expr("elapsed div 15 AS bucket")).agg(
+        F.expr("CAST(sum(cnt) AS BIGINT) AS n_msgs"),
+        F.expr("max(start_epoch) AS start_epoch"),
+        F.expr("max(num_highlights) AS num_highlights"),
     )
-    w_r = Window.partitionBy("channel_id", "video_id").orderBy(
-        F.desc("n_msgs"), F.asc("bucket")
-    )
-    ranked = (
-        activity.withColumn("rn", F.row_number().over(w_r))
-        .where((F.col("rn") <= F.col("num_highlights")) & (F.col("n_msgs") > 9))
-    )
+    ranked = activity.withColumn(
+        "rn",
+        F.expr(
+            "row_number() OVER (PARTITION BY channel_id, video_id ORDER BY n_msgs DESC, bucket ASC)"
+        ),
+    ).where("rn <= num_highlights AND n_msgs > 9")
     return (
         ranked.join(F.broadcast(channels), "channel_id")
-        .select(
+        .selectExpr(
             "channel_name",
             "video_id",
-            (F.col("start_epoch") + F.col("bucket") * 15 - 10)
-            .cast("bigint")
-            .alias("highlight_epoch"),
-            (F.col("bucket") * 15).cast("bigint").alias("spike_seconds"),
+            "CAST(start_epoch + bucket * 15 - 10 AS BIGINT) AS highlight_epoch",
+            "CAST(bucket * 15 AS BIGINT) AS spike_seconds",
             "n_msgs",
         )
         .orderBy("channel_name", "video_id", "highlight_epoch")

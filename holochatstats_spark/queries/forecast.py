@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from holochatstats_spark.functions.core import round2
+from holochatstats_spark.functions.core import round2, round_half_up_sql
 from holochatstats_spark.queries import register
 from holochatstats_spark.tables import load_table
 
@@ -85,6 +85,25 @@ def linear_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a floor at 0. One groupBy per series + a broadcast horizon spine —
 # per-channel fits at 100 TB are distributed moment sums, never a collect.
 # ---------------------------------------------------------------------------
+def _fsum(arr: str) -> str:
+    """Left-to-right double fold of an array (SQL text)."""
+    return f"aggregate({arr}, 0.0D, (acc, y) -> acc + y)"
+
+
+# The ewm_forecast folds over the scaled curve ``s`` of ``n_i`` points, as
+# SQL text: the exp-linspace weight at position i, the weighted and plain
+# sums, the mean and the population variance.
+_EWM_WEIGHT = (
+    "CASE WHEN n_i > 1 THEN exp(-1.0D + CAST(i AS DOUBLE) / (CAST(n_i AS DOUBLE) - 1.0D))"
+    " ELSE 1.0D END"
+)
+_EWM_SW_SUM = _fsum(f"transform(s, (v, i) -> v * {_EWM_WEIGHT})")
+_EWM_W_SUM = _fsum(f"transform(s, (v, i) -> {_EWM_WEIGHT})")
+_EWM_MEAN = f"{_fsum('s')} / CAST(n_i AS DOUBLE)"
+_EWM_SQ_DEV = f"transform(s, t -> (t - {_EWM_MEAN}) * (t - {_EWM_MEAN}))"
+_EWM_VAR = f"{_fsum(_EWM_SQ_DEV)} / CAST(n_i AS DOUBLE)"
+
+
 @register(
     "ewm_forecast",
     oracle="""
@@ -140,8 +159,6 @@ def linear_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def ewm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from holochatstats_spark.functions.core import round_half_up
-
     o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.col("o_orderpriority").alias("series"),
@@ -163,85 +180,52 @@ def ewm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # there (nondeterministic, forecaster.py:183-185); a 1-month series
     # gets weight 1.0 instead of exp(0/0)=NaN poisoning the unused branch
     arr = monthly.groupBy("series").agg(
-        F.sort_array(F.collect_list(F.struct("m", "x"))).alias("pts")
+        F.expr("sort_array(collect_list(struct(m, x))) AS pts")
     )
-    xs = F.transform(F.col("pts"), lambda e: e["x"])
-    base = arr.select(
+    base = arr.selectExpr(
         "series",
-        F.size("pts").alias("n_i"),
-        F.array_min(xs).alias("mn"),
-        F.array_max(xs).alias("mx"),
-        xs.alias("xs"),
+        "size(pts) AS n_i",
+        "array_min(transform(pts, e -> e.x)) AS mn",
+        "array_max(transform(pts, e -> e.x)) AS mx",
+        "transform(pts, e -> e.x) AS xs",
     )
-    n_d = F.col("n_i").cast("double")
-    s_arr = F.transform(
-        "xs",
-        lambda x: F.when(F.col("mx") == F.col("mn"), F.lit(0.5)).otherwise(
-            F.lit(0.1)
-            + F.lit(0.8) * (x - F.col("mn")) / (F.col("mx") - F.col("mn"))
-        ),
-    )
-    scaled = base.select("series", "n_i", "mn", "mx", s_arr.alias("s"))
-    wgt = lambda i: (  # noqa: E731 — exp-linspace weight at position i
-        F.when(
-            F.col("n_i") > 1,
-            F.exp(F.lit(-1.0) + i.cast("double") / (n_d - F.lit(1.0))),
-        ).otherwise(F.lit(1.0))
-    )
-    fsum = lambda col: F.aggregate(col, F.lit(0.0), lambda a, v: a + v)  # noqa: E731
-    s_sum = fsum(F.col("s"))
-    sw_sum = fsum(F.transform("s", lambda v, i: v * wgt(i)))
-    w_sum = fsum(F.transform("s", lambda v, i: wgt(i)))
-    mean = s_sum / n_d
-    var = fsum(F.transform("s", lambda v: (v - mean) * (v - mean))) / n_d
-    fit = scaled.select(
+    scaled = base.selectExpr(
         "series",
-        F.col("n_i").cast("bigint").alias("n_months"),
+        "n_i",
         "mn",
         "mx",
-        F.when(F.col("n_i") >= 3, sw_sum / w_sum).otherwise(mean).alias("wm"),
-        F.when(F.col("n_i") > 1, F.sqrt(var)).otherwise(F.lit(0.1)).alias("sd"),
-        F.when(
-            F.col("n_i") >= 2,
-            (F.element_at("s", F.col("n_i")) - F.element_at("s", 1)) / F.col("n_i"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("trend"),
+        "transform(xs, x -> CASE WHEN mx = mn THEN 0.5D"
+        " ELSE 0.1D + 0.8D * (x - mn) / (mx - mn) END) AS s",
+    )
+    fit = scaled.selectExpr(
+        "series",
+        "CAST(n_i AS BIGINT) AS n_months",
+        "mn",
+        "mx",
+        f"CASE WHEN n_i >= 3 THEN {_EWM_SW_SUM} / {_EWM_W_SUM} ELSE {_EWM_MEAN} END AS wm",
+        f"CASE WHEN n_i > 1 THEN sqrt({_EWM_VAR}) ELSE 0.1D END AS sd",
+        "CASE WHEN n_i >= 2 THEN (element_at(s, n_i) - element_at(s, 1)) / n_i"
+        " ELSE 0.0D END AS trend",
     )
     horizons = spark.range(1, 4).select(F.col("id").cast("int").alias("h"))
-    fc = fit.crossJoin(F.broadcast(horizons)).select(
+    fc = fit.crossJoin(F.broadcast(horizons)).selectExpr(
         "series",
         "n_months",
         "h",
-        (
-            (
-                F.least(
-                    F.greatest(F.col("wm") + F.col("trend") * F.col("h"), F.lit(0.05)),
-                    F.lit(0.95),
-                )
-                - 0.1
-            )
-            * (F.col("mx") - F.col("mn"))
-            / 0.8
-            + F.col("mn")
-        ).alias("orig"),
-        (F.col("sd") * (F.col("mx") - F.col("mn")) / 0.8).alias("sd_orig"),
-        (1 + 0.2 * (F.col("h") - 1)).alias("widen"),
+        "(least(greatest(wm + trend * h, 0.05D), 0.95D) - 0.1D) * (mx - mn) / 0.8D + mn AS orig",
+        "sd * (mx - mn) / 0.8D AS sd_orig",
+        "(h - 1) * 0.2D + 1 AS widen",
     )
-    spread = F.col("sd_orig") * F.col("widen")
-    return fc.select(
+    spread = "sd_orig * widen"
+    return fc.selectExpr(
         "series",
         "n_months",
         "h",
-        round_half_up(F.col("orig"), 2).alias("forecast"),
-        round_half_up(F.greatest(F.lit(0.0), F.col("orig") - 1.645 * spread), 2).alias(
-            "ci_lower"
-        ),
-        round_half_up(F.greatest(F.lit(0.0), F.col("orig") - 0.674 * spread), 2).alias(
-            "p25"
-        ),
-        round_half_up(F.col("orig") + 0.674 * spread, 2).alias("p75"),
-        round_half_up(F.col("orig") + 1.645 * spread, 2).alias("ci_upper"),
+        f"{round_half_up_sql('orig', 2)} AS forecast",
+        f"{round_half_up_sql(f'greatest(0.0D, orig - {spread} * 1.645D)', 2)} AS ci_lower",
+        f"{round_half_up_sql(f'greatest(0.0D, orig - {spread} * 0.674D)', 2)} AS p25",
+        f"{round_half_up_sql(f'orig + {spread} * 0.674D', 2)} AS p75",
+        f"{round_half_up_sql(f'orig + {spread} * 1.645D', 2)} AS ci_upper",
     ).orderBy("series", "h")
 
 

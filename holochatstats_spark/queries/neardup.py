@@ -25,7 +25,7 @@ from holochatstats_spark.operators.ann import lsh_buckets, lsh_buckets_sql
 from holochatstats_spark.operators.pairs import bucket_pairs
 from holochatstats_spark.queries import register
 from holochatstats_spark.queries.textops import SIMHASH_CTES_DUCK, simhash_df
-from holochatstats_spark.queries.vector import dot_expr
+from holochatstats_spark.queries.vector import dot_sql
 from holochatstats_spark.tables import load_table
 
 EMB_DIM = 64
@@ -38,6 +38,11 @@ COSINE_THRESHOLD = 0.3
 HAMMING_THRESHOLD = 3
 SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = 15  # 4×15 = the full 60-bit hash (textops.SIMHASH_BITS)
+# the SIMHASH_BANDS band values of a 60-bit simhash (Spark SQL text)
+_SIMHASH_BAND_VALUES = ", ".join(
+    f"shiftright(simhash, {SIMHASH_BAND_BITS * b}) & {2**SIMHASH_BAND_BITS - 1}"
+    for b in range(SIMHASH_BANDS)
+)
 
 
 # ---------------------------------------------------------------------------
@@ -94,28 +99,24 @@ def lsh_neardup_pairs(
     drives the PRODUCTION pipeline over a planted frame (VERDICT r20
     item 3).
     """
-    bands = lsh_buckets(emb, "vec_id", "embedding", dim).select(
-        F.struct("vec_id").alias("m"), "band", "band_val"
+    bands = lsh_buckets(emb, "vec_id", "embedding", dim).selectExpr(
+        "struct(vec_id) AS m", "band", "band_val"
     )
     cand = (
         bucket_pairs(bands, ["band", "band_val"], "m", "vec_id")
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+        .selectExpr("a.vec_id AS vec_a", "b.vec_id AS vec_b")
         .distinct()
     )
-    e = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
+    e = emb.selectExpr(
+        "vec_id", "embedding", f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm"
     )
     ea, eb = e.alias("ea"), e.alias("eb")
-    sim = dot_expr("ea.embedding", "eb.embedding") / F.nullif(
-        F.col("ea.nrm") * F.col("eb.nrm"), F.lit(0.0)
-    )
+    sim = f"{dot_sql('ea.embedding', 'eb.embedding')} / nullif(ea.nrm * eb.nrm, 0.0D)"
     return (
-        cand.join(ea, F.col("vec_a") == F.col("ea.vec_id"))
-        .join(eb, F.col("vec_b") == F.col("eb.vec_id"))
-        .where(sim > threshold)
-        .select("vec_a", "vec_b", F.round(sim, 6).alias("cosine_sim"))
+        cand.join(ea, F.expr("vec_a = ea.vec_id"))
+        .join(eb, F.expr("vec_b = eb.vec_id"))
+        .where(F.expr(sim) > threshold)
+        .selectExpr("vec_a", "vec_b", f"round({sim}, 6) AS cosine_sim")
         .orderBy("vec_a", "vec_b")
     )
 
@@ -166,29 +167,14 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is unchanged.
     """
     hashes = simhash_df(spark, sf_dir)
-    band_arr = F.array(
-        *[
-            F.expr(
-                f"shiftright(simhash, {SIMHASH_BAND_BITS * b}) & {2**SIMHASH_BAND_BITS - 1}"
-            )
-            for b in range(SIMHASH_BANDS)
-        ]
-    )
-    bands = hashes.select(
-        F.struct(F.col("doc_id"), F.col("simhash")).alias("m"),
-        F.posexplode(band_arr).alias("band", "bv"),
+    bands = hashes.selectExpr(
+        "struct(doc_id, simhash) AS m", f"posexplode(array({_SIMHASH_BAND_VALUES})) AS (band, bv)"
     )
     pairs = bucket_pairs(bands, ["band", "bv"], "m", "doc_id")
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    ).cast("int")
+    hamming = "CAST(bit_count(a.simhash ^ b.simhash) AS INT)"
     return (
-        pairs.where(hamming <= HAMMING_THRESHOLD)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
+        pairs.where(f"{hamming} <= {HAMMING_THRESHOLD}")
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b", f"{hamming} AS hamming")
         .distinct()
         .orderBy("doc_a", "doc_b")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from holochatstats_spark.functions.core import log_dampen, round_half_up
 from holochatstats_spark.operators.cooccur import postings_cosine
 from holochatstats_spark.queries import register
-from holochatstats_spark.queries.textops import _STOP_SQL, _STOPWORDS, _TOKS, _TOKS_DUCK
+from holochatstats_spark.queries.textops import _STOP_SQL, _TOKS, _TOKS_DUCK
 from holochatstats_spark.tables import load_table
 
 PARTICIPATION_EXCLUSION_THRESHOLD = 3  # reference api.py:930
@@ -35,11 +35,9 @@ def _user_type_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
-        .agg(F.count("*").cast("double").alias("cnt"))
+        .agg(F.expr("CAST(count(*) AS DOUBLE) AS cnt"))
     )
-    return w.groupBy("user_id").agg(
-        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
-    )
+    return w.groupBy("user_id").agg(F.expr("collect_list(struct(event_type, cnt)) AS ms"))
 
 
 # ---------------------------------------------------------------------------
@@ -110,35 +108,33 @@ def recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure function of (user_id, channel), constant across each group, so
     it drops whole groups, never individual addends.
     """
-    from pyspark.sql import Window
-
     peruser = _user_type_postings(spark, sf_dir)
     sims = postings_cosine(peruser, "event_type", "cnt", upper=False)
-    exploded = peruser.select(
+    exploded = peruser.selectExpr(
         "user_id",
-        F.size("ms").cast("bigint").alias("n_ch"),
-        F.map_from_entries("ms").alias("own_cnt"),
-        F.explode("ms").alias("a"),
+        "CAST(size(ms) AS BIGINT) AS n_ch",
+        "map_from_entries(ms) AS own_cnt",
+        "explode(ms) AS a",
     )
     # null-safe join key: a plain `=` would infer isnotnull(event_type)
     # and push it below the postings aggregation, splitting the two
     # consumers' subtrees so the runtime stage reuse is lost; event_type
     # is never null, so `<=>` is result-identical
     filtered = (
-        exploded.join(F.broadcast(sims), F.col("a.event_type").eqNullSafe(sims.key_a))
+        exploded.join(F.broadcast(sims), F.expr("a.event_type <=> key_a"))
         .where(
-            F.coalesce(F.element_at(F.col("own_cnt"), F.col("key_b")), F.lit(0.0))
-            <= PARTICIPATION_EXCLUSION_THRESHOLD
+            "coalesce(element_at(own_cnt, key_b), 0.0D)"
+            f" <= {PARTICIPATION_EXCLUSION_THRESHOLD}"
         )
-        .groupBy("user_id", "n_ch", F.col("key_b").alias("channel"))
-        .agg(F.sum("sim").alias("raw_score"))
-    )
-    w_rank = Window.partitionBy("user_id").orderBy(
-        F.desc("raw_score"), F.asc("channel")
+        .groupBy("user_id", "n_ch", F.expr("key_b AS channel"))
+        .agg(F.expr("sum(sim) AS raw_score"))
     )
     return (
-        filtered.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= 10)
+        filtered.withColumn(
+            "rn",
+            F.expr("row_number() OVER (PARTITION BY user_id ORDER BY raw_score DESC, channel ASC)"),
+        )
+        .where("rn <= 10")
         .select(
             "user_id",
             "channel",
@@ -217,45 +213,33 @@ def tfidf_lang_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").withColumn("t", F.expr(_TOKS))
     # uni+bigrams in one explode, so documents is scanned once
-    grams = F.expr(
+    grams = (
         "concat(t, CASE WHEN size(t) >= 2 THEN "
         "transform(sequence(0, size(t) - 2), i -> concat_ws(' ', t[i], t[i+1])) "
         "ELSE array() END)"
     )
-    clean = (
-        docs.select("lang", F.explode(grams).alias("term"))
-        .where((F.col("term") != "") & ~F.col("term").isin(*_STOPWORDS))
+    clean = docs.selectExpr("lang", f"explode({grams}) AS term").where(
+        f"term != '' AND NOT (term IN ({_STOP_SQL}))"
     )
-    tf = clean.groupBy("lang", "term").agg(F.count("*").cast("double").alias("tf"))
+    tf = clean.groupBy("lang", "term").agg(F.expr("CAST(count(*) AS DOUBLE) AS tf"))
     vocab = (
         tf.groupBy("term")
         .agg(
-            F.sum("tf").alias("total"),
-            F.count("*").alias("df"),
-            F.collect_list(F.struct("lang", "tf")).alias("postings"),
+            F.expr("sum(tf) AS total"),
+            F.expr("count(*) AS df"),
+            F.expr("collect_list(struct(lang, tf)) AS postings"),
         )
         .orderBy(F.desc("total"), F.asc("term"))
         .limit(VOCAB_SIZE)
     )
-    n_docs = tf.agg(F.countDistinct("lang").cast("double").alias("n"))
-    idf = (
-        F.log((1.0 + F.col("n")) / (1.0 + F.col("df").cast("double"))) + 1.0
-    )
-    weighted = vocab.crossJoin(F.broadcast(n_docs)).select(
-        F.transform(
-            "postings",
-            lambda m: F.struct(
-                m.lang.alias("lang"), (m.tf * idf).alias("wt")
-            ),
-        ).alias("ms")
+    n_docs = tf.agg(F.expr("CAST(count(DISTINCT lang) AS DOUBLE) AS n"))
+    idf = "ln((n + 1.0D) / (CAST(df AS DOUBLE) + 1.0D)) + 1.0D"
+    weighted = vocab.crossJoin(F.broadcast(n_docs)).selectExpr(
+        f"transform(postings, m -> struct(m.lang AS lang, m.tf * ({idf}) AS wt)) AS ms"
     )
     return (
         postings_cosine(weighted, "lang", "wt")
-        .select(
-            F.col("key_a").alias("lang_a"),
-            F.col("key_b").alias("lang_b"),
-            F.round("sim", 6).alias("tfidf_cosine"),
-        )
+        .selectExpr("key_a AS lang_a", "key_b AS lang_b", "round(sim, 6) AS tfidf_cosine")
         .orderBy("lang_a", "lang_b")
     )
 

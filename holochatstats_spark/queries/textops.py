@@ -406,10 +406,12 @@ def _affine_params(i: int) -> tuple[int, int]:
 
 _AFFINE = [_affine_params(i) for i in range(1, N_HASHES + 1)]
 
-_SIG_COLS_DUCK = ",\n             ".join(
+#: The 16 signature aggregates, SQL text valid in both engines.
+_SIG_COLS = [
     f"MIN(({a} * h0 + {b}) % {MINHASH_P}) AS mh{i}"
     for i, (a, b) in enumerate(_AFFINE, start=1)
-)
+]
+_SIG_COLS_DUCK = ",\n             ".join(_SIG_COLS)
 _BAND_SIGS_DUCK = ", ".join(
     "concat_ws('-', "
     + ", ".join(f"mh{b * BAND_SIZE + j + 1}" for j in range(BAND_SIZE))
@@ -420,6 +422,21 @@ _EST_DUCK = (
     "("
     + " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END" for i in range(1, N_HASHES + 1))
     + f") / {N_HASHES}.0"
+)
+
+
+# The Spark band and agreement columns as SQL text, from the same band
+# layout as the DuckDB twin above.
+_MH_COLS = ", ".join(f"mh{i}" for i in range(1, N_HASHES + 1))
+_BAND_SIGS = ", ".join(
+    "concat_ws('-', "
+    + ", ".join(f"CAST(mh{b * BAND_SIZE + j + 1} AS STRING)" for j in range(BAND_SIZE))
+    + ")"
+    for b in range(N_HASHES // BAND_SIZE)
+)
+_AGREE = (
+    "aggregate(zip_with(a.mhs, b.mhs, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
+    " 0, (acc, v) -> acc + v)"
 )
 
 
@@ -482,49 +499,21 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from holochatstats_spark.operators.pairs import bucket_pairs
 
     sh = _shingle_df(spark, sf_dir).drop("lang")
-    hashed = sh.select(
+    hashed = sh.selectExpr(
         "doc_id",
-        (
-            F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
-            % MINHASH_P
-        ).alias("h0"),
+        f"CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P} AS h0",
     )
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h0") + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_AFFINE, start=1)
-        ]
-    )
-    band_sigs = F.array(
-        *[
-            F.concat_ws(
-                "-",
-                *[
-                    F.col(f"mh{b * BAND_SIZE + j + 1}").cast("string")
-                    for j in range(BAND_SIZE)
-                ],
-            )
-            for b in range(N_HASHES // BAND_SIZE)
-        ]
-    )
-    mhs = F.array(*[F.col(f"mh{i}") for i in range(1, N_HASHES + 1)])
-    bands = sig.select(
-        F.struct(F.col("doc_id"), mhs.alias("mhs")).alias("m"),
-        F.posexplode(band_sigs).alias("band", "band_sig"),
+    sig = hashed.groupBy("doc_id").agg(*[F.expr(e) for e in _SIG_COLS])
+    bands = sig.selectExpr(
+        f"struct(doc_id, array({_MH_COLS}) AS mhs) AS m",
+        f"posexplode(array({_BAND_SIGS})) AS (band, band_sig)",
     )
     pairs = bucket_pairs(bands, ["band", "band_sig"], "m", "doc_id")
-    agree = F.aggregate(
-        F.zip_with(
-            "a.mhs", "b.mhs", lambda x, y: F.when(x == y, 1).otherwise(0)
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     return (
-        pairs.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(agree / float(N_HASHES), 4).alias("est_jaccard"),
+        pairs.selectExpr(
+            "a.doc_id AS doc_a",
+            "b.doc_id AS doc_b",
+            f"round({_AGREE} / {float(N_HASHES)}D, 4) AS est_jaccard",
         )
         # est_jaccard is a pure function of the pair, so the 3-column
         # distinct dedupes multi-band collisions exactly like the r20

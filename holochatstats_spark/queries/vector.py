@@ -25,13 +25,18 @@ from holochatstats_spark.queries import register
 from holochatstats_spark.tables import load_table
 
 
-def dot_expr(a: str, b: str) -> F.Column:
-    """Sequential left-to-right double fold of a·b (deterministic order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot_sql(a: str, b: str) -> str:
+    """Sequential left-to-right double fold of a·b (deterministic order),
+    as SQL text over the array columns ``a`` and ``b``."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0.0D, (acc, v) -> acc + v)"
     )
+
+
+def dot_expr(a: str, b: str) -> F.Column:
+    """:func:`dot_sql` as a Column."""
+    return F.expr(dot_sql(a, b))
 
 
 # ---------------------------------------------------------------------------

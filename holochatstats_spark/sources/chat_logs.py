@@ -38,10 +38,13 @@ MESSAGE_SCHEMA = T.StructType(
 def with_video_ts(df: DataFrame) -> DataFrame:
     """The bronze projection shared by the batch and streaming readers:
     video_id from the <video_id>.jsonl[.gz] file name (the reference keys
-    the cache by file name), timestamp µs → TimestampType ts (F13)."""
+    the cache by file name; '' for any other name), timestamp µs →
+    TimestampType ts (F13). The name comes from the file source's
+    ``_metadata.file_name``, a per-file constant, not a regex over each
+    row's full path; ``df`` must be the reader's frame."""
     return df.withColumn(
         "video_id",
-        F.regexp_extract(F.input_file_name(), r"([^/]+?)\.jsonl(\.gz)?$", 1),
+        F.regexp_extract(F.col("_metadata.file_name"), r"^(.+?)\.jsonl(\.gz)?$", 1),
     ).withColumn("ts", F.timestamp_micros(F.col("timestamp")))
 
 

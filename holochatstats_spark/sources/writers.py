@@ -28,28 +28,16 @@ def write_month_partitioned(
     untouched — the exact semantics of the reference's
     DELETE-month + INSERT-month refresh proc (queries.py:120-129).
     """
-    spark = df.sparkSession
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        (
-            df.withColumn("_month", F.date_format(F.col(month_col), "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("_month")
-            .format(fmt)
-            .save(path)
-        )
-    finally:
-        # restore the shared session's prior setting — never leak a write
-        # mode into unrelated jobs on the same session
-        if prev is not None:
-            spark.conf.set(conf_key, prev)
-        else:
-            spark.conf.unset(conf_key)
+    (
+        df.withColumn("_month", F.date_format(F.col(month_col), "yyyy-MM"))
+        .write.mode("overwrite")
+        # a write option, not the session conf: the shared session's
+        # setting is never touched
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_month")
+        .format(fmt)
+        .save(path)
+    )
 
 
 #: Refuse single-file exports above this many rows — a coalesce(1) funnel

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from holochatstats_spark.sources.chat_logs import read_chat_logs
 from holochatstats_spark.sources.video_metadata import read_video_metadata
 from holochatstats_spark.sources.writers import write_month_partitioned
+from holochatstats_spark.streaming import stream_messages
 
 
 def test_chat_log_jsonl_gz_roundtrip(spark, tmp_path):
@@ -55,6 +56,42 @@ def test_chat_log_jsonl_gz_roundtrip(spark, tmp_path):
     assert rows["u1"]["message"] == "こんにちは"
 
 
+def test_video_id_comes_from_the_file_name_in_batch_and_stream(spark, tmp_path):
+    root = tmp_path / "landing"
+    # relative path -> expected video_id; one record per file, its message
+    # naming the file; nested directories, read through a glob
+    files = {
+        "ch1/2024-01/x1.jsonl": "x1",
+        "ch1/2024-02/x2.jsonl.gz": "x2",
+        "ch2/v.jsonl/x3.jsonl.gz": "x3",  # under a log-like directory name
+        "ch2/2024-03/notes.json": "",  # not <video_id>.jsonl[.gz]
+    }
+    for rel in files:
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        line = json.dumps({"user_id": "u1", "timestamp": 1_704_067_200_000_000, "message": rel})
+        opener = gzip.open if rel.endswith(".gz") else open
+        with opener(p, "wt", encoding="utf-8") as f:
+            f.write(line + "\n")
+
+    batch = {
+        r["message"]: r["video_id"]
+        for r in read_chat_logs(spark, f"{root}/*/*/*").select("message", "video_id").collect()
+    }
+    q = (
+        stream_messages(spark, f"{root}/*/*/*")
+        .select("message", "video_id")
+        .writeStream.format("memory")
+        .queryName("video_id_probe")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    streamed = {r["message"]: r["video_id"] for r in spark.table("video_id_probe").collect()}
+    assert batch == files
+    assert streamed == files
+
+
 def test_write_month_partitioned_is_idempotent_per_month(spark, tmp_path):
     path = str(tmp_path / "gold")
     schema = "k string, v bigint, observed_month date"
@@ -82,6 +119,23 @@ def test_write_month_partitioned_restores_conf(spark, tmp_path):
     write_month_partitioned(df, str(tmp_path / "conf_probe"))
     assert spark.conf.get(key) == "static"
     spark.conf.unset(key)
+
+
+def test_write_month_partitioned_leaves_session_conf_untouched(spark, tmp_path):
+    # a fresh SQL conf whose partitionOverwriteMode is the static default:
+    # the rewrite of one month must still replace only that month
+    session = spark.newSession()
+    before = session.conf.getAll
+    path = str(tmp_path / "gold")
+    schema = "k string, observed_month date"
+    write_month_partitioned(
+        session.createDataFrame([("a", dt.date(2024, 1, 1)), ("c", dt.date(2024, 2, 1))], schema),
+        path,
+    )
+    write_month_partitioned(session.createDataFrame([("z", dt.date(2024, 1, 1))], schema), path)
+    assert session.conf.getAll == before
+    got = {(r["k"], r["_month"]) for r in session.read.parquet(path).collect()}
+    assert got == {("z", "2024-01"), ("c", "2024-02")}
 
 
 def test_read_video_metadata_dict_file(spark, tmp_path):

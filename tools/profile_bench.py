@@ -1,11 +1,14 @@
 """Per-query profiling harness for the optimization rounds (guide §1).
 
-For each named query (default: all bench-tagged): capture
+For each named query (default: all bench-tagged): build it twice and
+record the construction cost — the cold build (the query's first build in
+this process), the warm build (an immediate rebuild) and the Spark jobs
+launched by the cold build (a job group around it); capture
 .explain("formatted") to plans/<round>/<query>_<tag>.txt, then time the
 computation with the noop sink (guide §1.4) min-of-N, labelled via
-setJobDescription. Prints one JSON line with the noop timings so
+setJobDescription. Prints one JSON line with the noop timings (so
 sink/collect overhead is visible separately from bench.py's collect()
-timings.
+timings) and the per-query build record.
 
 Usage: python tools/profile_bench.py <tag> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
@@ -51,14 +54,26 @@ def main() -> None:
     spark = get_spark("holochatstats-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: codegen + page cache
-    registry[names[0]].build(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    # warmup: JVM, codegen and scan paths, without building a listed query
+    spark.range(1000).selectExpr("sum(id)").collect()
 
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
+    builds: dict[str, dict[str, float]] = {}
     for name in names:
+        group = f"profile:{name}:build"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
         df = registry[name].build(spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        registry[name].build(spark, sf_dir)
+        t2 = time.perf_counter()
+        builds[name] = {
+            "cold_build_ms": round((t1 - t0) * 1e3, 1),
+            "warm_build_ms": round((t2 - t1) * 1e3, 1),
+            "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        }
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -72,6 +87,8 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         timings[name] = round(best, 3)
         # post-execution plan: AQE final stages incl. ReusedExchange nodes
+        # (the noop writes ran their own executions, so collect this one)
+        df.collect()
         final = df._jdf.queryExecution().executedPlan().toString()
         with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
@@ -86,6 +103,7 @@ def main() -> None:
                 "timing": f"min_of_{n_runs}",
                 "total": round(sum(timings.values()), 3),
                 "queries": timings,
+                "build": builds,
             }
         )
     )
