@@ -25,7 +25,10 @@ def sql_str(s: str) -> str:
 
 
 def month_str(ts: Column) -> Column:
-    """F6: month bucket as a sortable 'yyyy-MM' string (UTC session TZ)."""
+    """F6: month bucket as a sortable 'yyyy-MM' string. Timestamps are UTC
+    wall-clock ``timestamp_ntz``; the library sets no session conf. The
+    bucket of an NTZ ``ts`` is its own wall-clock month, under any session
+    time zone."""
     return F.date_format(ts, "yyyy-MM")
 
 

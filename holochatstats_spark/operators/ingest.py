@@ -79,16 +79,14 @@ def message_counters() -> list[Column]:
     return [F.expr(e) for e in _MESSAGE_COUNTERS_SQL]
 
 
-def build_user_data(
-    messages: DataFrame,
-    default_year: int | None = None,
-    default_month: int | None = None,
-) -> DataFrame:
+def build_user_data(messages: DataFrame) -> DataFrame:
     """messages (bronze) → user_data (silver): one row per
     (channel_id, video_id, user_id). Expects columns: channel_id,
-    video_id, user_id, username, ts (timestamp), membership_rank,
-    message_category, message, message_type; optional seq for total
-    ordering within equal timestamps.
+    video_id, user_id, username, ts (UTC wall-clock timestamp_ntz),
+    membership_rank, message_category, message, message_type; optional seq
+    for total ordering within equal timestamps. observed_month is the month
+    of the video's last message; a video whose rows all have a NULL ts
+    keeps a NULL observed_month.
     """
     msgs = classify_messages(messages)
     if "seq" not in msgs.columns:
@@ -124,16 +122,7 @@ def build_user_data(
     # observed_month: month of the video's LAST message (any user) —
     # window over the per-user aggregate (cardinality = users/video), not
     # the raw messages.
-    per_user = per_user.withColumn(
+    return per_user.withColumn(
         "observed_month",
         F.expr("trunc(max(last_message_at) OVER (PARTITION BY channel_id, video_id), 'MM')"),
     )
-    if default_year is not None and default_month is not None:
-        per_user = per_user.withColumn(
-            "observed_month",
-            F.expr(
-                "coalesce(observed_month,"
-                f" CAST('{default_year:04d}-{default_month:02d}-01' AS DATE))"
-            ),
-        )
-    return per_user

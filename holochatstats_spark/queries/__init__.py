@@ -12,6 +12,11 @@ Determinism contract for every query:
 - floats rounded (2dp for money-ish sums, 6dp for unit-scale similarities);
 - counts/sums-of-ints cast to BIGINT on both sides (DuckDB's SUM(int)
   yields HUGEINT otherwise).
+
+Time-zone contract: timestamps are UTC wall-clock ``timestamp_ntz``; the
+library sets no session conf. A builder is registered as is and runs on
+whatever session it is handed; its month/day buckets come from NTZ values,
+so they are the same under every ``spark.sql.session.timeZone``.
 """
 
 from __future__ import annotations
@@ -20,8 +25,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-from holochatstats_spark.session import ensure_session_defaults
 
 
 @dataclass(frozen=True)
@@ -46,21 +49,15 @@ def register(
     """Decorator registering a query builder under ``name``."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ensure_session_defaults(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
         REGISTRY[name] = Query(
             name=name,
-            build=wrapped,
+            build=fn,
             oracle=oracle,
             survey=survey,
             doc=(fn.__doc__ or "").strip(),
             tags=tuple(tags),
         )
-        return wrapped
+        return fn
 
     return deco
 

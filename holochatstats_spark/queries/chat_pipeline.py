@@ -607,8 +607,9 @@ def streaming_hours_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours = F.col("duration_sec") / 3600.0
     monthly = kept.groupBy(
         "channel_id",
-        F.date_format(F.timestamp_seconds(F.col("end_epoch")), "yyyy-MM").alias(
-            "month"
+        F.expr(
+            "date_format(timestampadd(SECOND, end_epoch, TIMESTAMP_NTZ'1970-01-01'),"
+            " 'yyyy-MM') AS month"
         ),
     ).agg(
         F.sum(hours).alias("sum_h"),

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from holochatstats_spark.functions.core import log_dampen, round_half_up
 from holochatstats_spark.operators.cooccur import postings_cosine
 from holochatstats_spark.queries import register
-from holochatstats_spark.queries.textops import _STOP_SQL, _TOKS, _TOKS_DUCK
+from holochatstats_spark.queries.textops import _STOP_SQL, _TOKS_DUCK, _with_tokens
 from holochatstats_spark.tables import load_table
 
 PARTICIPATION_EXCLUSION_THRESHOLD = 3  # reference api.py:930
@@ -211,11 +211,11 @@ def tfidf_lang_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms together. The 6dp round absorbs summation-order drift, the same
     cross-engine contract as every cosine here.
     """
-    docs = load_table(spark, sf_dir, "documents").withColumn("t", F.expr(_TOKS))
+    docs = _with_tokens(load_table(spark, sf_dir, "documents"))
     # uni+bigrams in one explode, so documents is scanned once
     grams = (
-        "concat(t, CASE WHEN size(t) >= 2 THEN "
-        "transform(sequence(0, size(t) - 2), i -> concat_ws(' ', t[i], t[i+1])) "
+        "concat(toks, CASE WHEN size(toks) >= 2 THEN "
+        "transform(sequence(0, size(toks) - 2), i -> concat_ws(' ', toks[i], toks[i+1])) "
         "ELSE array() END)"
     )
     clean = docs.selectExpr("lang", f"explode({grams}) AS term").where(

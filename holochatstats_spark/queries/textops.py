@@ -31,9 +31,7 @@ from holochatstats_spark.functions.core import round_half_up
 from holochatstats_spark.queries import register
 from holochatstats_spark.tables import load_table
 
-# Normalized whitespace-token array, shared by all queries here.
-_TOKS = "split(regexp_replace(trim(lower(text)), '\\\\s+', ' '), ' ')"
-# DuckDB equivalent (1-based lists).
+# DuckDB twin of _with_tokens' token array (1-based lists).
 _TOKS_DUCK = "string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')"
 
 _STOPWORDS = ("the", "a", "and", "of", "to", "in")
@@ -44,7 +42,12 @@ BAND_SIZE = 4  # 4 bands × 4 rows
 
 
 def _with_tokens(docs: DataFrame) -> DataFrame:
-    return docs.withColumn("toks", F.expr(_TOKS))
+    """Normalized whitespace-token array ``toks``, shared by all queries
+    here. The regex is a Column literal: in SQL text it would depend on the
+    session's ``spark.sql.parser.escapedStringLiterals``."""
+    return docs.withColumn(
+        "toks", F.split(F.regexp_replace(F.trim(F.lower("text")), r"\s+", " "), " ")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -545,8 +548,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # formulation was tried first: correct, but it shuffles tok counts twice
 # and its 60-aggregate HashAggregate pays ~3 s of janino codegen per plan
 # build.) Tokenization stays a single source of truth: the udf receives
-# the SAME `_TOKS` Spark-expression output the DuckDB twin mirrors, and
-# only does integer md5/bit math on those strings.
+# the SAME `_with_tokens` output the DuckDB twin mirrors, and only does
+# integer md5/bit math on those strings.
 # ---------------------------------------------------------------------------
 SIMHASH_BITS = 60
 
@@ -632,7 +635,7 @@ def _simhash_udf():
 
 def simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) — the Spark twin of SIMHASH_CTES_DUCK. Map-only:
-    tokens come from the shared `_TOKS` expression, the hash from the
+    tokens come from the shared `_with_tokens` expression, the hash from the
     Arrow-batched udf above. Docs with zero tokens are dropped, matching
     the twin's unnest (no tok rows => absent from hashes)."""
     docs = _with_tokens(load_table(spark, sf_dir, "documents"))

@@ -38,14 +38,19 @@ MESSAGE_SCHEMA = T.StructType(
 def with_video_ts(df: DataFrame) -> DataFrame:
     """The bronze projection shared by the batch and streaming readers:
     video_id from the <video_id>.jsonl[.gz] file name (the reference keys
-    the cache by file name; '' for any other name), timestamp µs →
-    TimestampType ts (F13). The name comes from the file source's
-    ``_metadata.file_name``, a per-file constant, not a regex over each
-    row's full path; ``df`` must be the reader's frame."""
+    the cache by file name; '' for any other name), timestamp µs → ts
+    (F13). The name comes from the file source's ``_metadata.file_name``,
+    a per-file constant, not a regex over each row's full path; ``df`` must
+    be the reader's frame.
+
+    Timestamps are UTC wall-clock ``timestamp_ntz``; the library sets no
+    session conf. So ts is the epoch instant's UTC wall clock, and the
+    months and days bucketed from it are the same under every session time
+    zone."""
     return df.withColumn(
         "video_id",
         F.regexp_extract(F.col("_metadata.file_name"), r"^(.+?)\.jsonl(\.gz)?$", 1),
-    ).withColumn("ts", F.timestamp_micros(F.col("timestamp")))
+    ).withColumn("ts", F.expr("timestampadd(MICROSECOND, timestamp, TIMESTAMP_NTZ'1970-01-01')"))
 
 
 def read_chat_logs(

@@ -21,7 +21,8 @@ from pyspark.sql import types as T
 VIDEO_META_VALUE = T.StructType(
     [
         T.StructField("title", T.StringType()),
-        # ISO-8601 UTC string in the reference cache; parsed to timestamp
+        # ISO-8601 UTC string in the reference cache; parsed to its UTC
+        # wall clock
         T.StructField("end_time", T.StringType()),
         # seconds (the reference's INTERVAL column is modeled as seconds,
         # SURVEY §1.2: friendlier to SUM/EXTRACT-style math)
@@ -34,7 +35,12 @@ VIDEO_META_SCHEMA = T.MapType(T.StringType(), VIDEO_META_VALUE)
 
 def read_video_metadata(spark: SparkSession, path: str) -> DataFrame:
     """Read <channel_id>.json dict files under ``path`` into a videos
-    dimension: (channel_id, video_id, title, end_time, duration_sec)."""
+    dimension: (channel_id, video_id, title, end_time, duration_sec).
+
+    end_time is the UTC wall clock of the parsed ISO-8601 instant as a
+    ``timestamp_ntz``: ``…Z`` and ``…+09:00`` spellings of one instant give
+    one value under every session time zone. (A string without an offset
+    is read by ``to_timestamp`` in the session time zone.)"""
     raw = spark.read.text(path, wholetext=True)
     parsed = raw.select(
         F.regexp_extract(F.input_file_name(), r"([^/]+?)\.json$", 1).alias(
@@ -48,6 +54,9 @@ def read_video_metadata(spark: SparkSession, path: str) -> DataFrame:
         "channel_id",
         "video_id",
         F.col("meta.title").alias("title"),
-        F.to_timestamp(F.col("meta.end_time")).alias("end_time"),
+        F.expr(
+            "timestampadd(MICROSECOND, unix_micros(to_timestamp(meta.end_time)),"
+            " TIMESTAMP_NTZ'1970-01-01') AS end_time"
+        ),
         F.col("meta.duration").alias("duration_sec"),
     )

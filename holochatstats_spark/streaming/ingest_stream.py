@@ -7,10 +7,14 @@ expression of that is readStream + windowed aggregation).
 Design:
 - file source on the chat-log landing directory, SAME explicit schema as
   the batch bronze reader (inference is disallowed on streams);
-- event-time tumbling windows with a watermark so state expires: the
-  stream aggregate keys are (window, channel, video, user) and late
-  replay lines beyond the watermark are dropped — replays are complete
-  files, so in practice the watermark only bounds state;
+- event-time tumbling windows keyed (window, channel, video, user).
+  Timestamps are UTC wall-clock ``timestamp_ntz``; the library sets no
+  session conf. The watermark and the window run on ``event_time =
+  timestamp_micros(timestamp)``, not on the NTZ ``ts``: Spark rejects an
+  NTZ event time (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and the window
+  bounds of an instant are epoch arithmetic, the same under every session
+  time zone. ``last_message_at`` stays ``max(ts)``, NTZ. Replay lines later
+  than the watermark are dropped;
 - the per-window counters roll up to the batch A1 frame by summing over
   windows (counters are associative; last_message_at is a max) — the
   downstream gold builds are unchanged.
@@ -56,9 +60,11 @@ def stream_user_counters(
     system of record for those columns)."""
     msgs = classify_messages(
         messages.withColumn("channel_id", F.lit(channel_id))
-    ).withWatermark("ts", watermark)
+    ).withColumn("event_time", F.timestamp_micros("timestamp")).withWatermark(
+        "event_time", watermark
+    )
     return msgs.groupBy(
-        F.window("ts", window_duration),
+        F.window("event_time", window_duration),
         "channel_id",
         "video_id",
         "user_id",

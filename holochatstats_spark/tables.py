@@ -22,7 +22,10 @@ its first data file, the same file Spark's own inference would read.
 
 The timestamp columns (events.ts, orders.o_orderdate, lineitem.l_shipdate)
 are parquet TIMESTAMP(MICROS) without UTC adjustment, declared
-``timestamp_ntz`` — the same naive wall-clock values DuckDB sees.
+``timestamp_ntz`` — the same naive wall-clock values DuckDB sees. This is
+the library-wide rule: timestamps are UTC wall-clock ``timestamp_ntz``; the
+library sets no session conf, and no loaded value depends on the session
+time zone.
 """
 
 from __future__ import annotations

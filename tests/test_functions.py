@@ -57,9 +57,12 @@ def test_safe_div_null_on_zero(spark):
 
 
 def test_month_str_and_bucket_utc(spark):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # an NTZ value buckets by its own wall clock, whatever the session zone;
+    # a fresh session keeps the zone off the shared fixture
+    session = spark.newSession()
+    session.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     row = (
-        spark.sql("SELECT timestamp'2024-03-31 23:59:59' AS ts")
+        session.sql("SELECT timestamp_ntz'2024-03-31 23:59:59' AS ts")
         .select(
             month_str(F.col("ts")).alias("m"),
             time_bucket(F.col("ts"), 1800).alias("b"),

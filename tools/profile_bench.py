@@ -10,9 +10,11 @@ setJobDescription. Prints one JSON line with the noop timings (so
 sink/collect overhead is visible separately from bench.py's collect()
 timings) and the per-query build record.
 
-Usage: python tools/profile_bench.py <tag> [query ...]
+Usage: PLANS_DIR=plans/<round> python tools/profile_bench.py <tag> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-     PROFILE_RUNS (default 3), PLANS_DIR (default plans/r21).
+     PROFILE_RUNS (default 3), PLANS_DIR (required: the directory the plans
+     are written to; no default, so a run cannot overwrite a committed
+     round's plans).
 """
 
 from __future__ import annotations
@@ -33,7 +35,13 @@ def main() -> None:
     only = set(sys.argv[2:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("PROFILE_RUNS", "3"))
-    plans_dir = os.environ.get("PLANS_DIR", "plans/r21")
+    plans_dir = os.environ.get("PLANS_DIR")
+    if not plans_dir:
+        sys.exit(
+            "PLANS_DIR is not set: name a new directory for the plans, "
+            "e.g. PLANS_DIR=plans/<round>; there is no default, so no run "
+            "overwrites a committed round's plans"
+        )
     os.makedirs(plans_dir, exist_ok=True)
 
     registry = load_all_queries()
