@@ -26,9 +26,9 @@ non-equi ``chunk_a <= chunk_b`` predicate:
 
 Single-lineage is preserved: both join sides are the SAME aggregated frame,
 and the shuffle stage is reused at runtime — the signature UDF still executes
-exactly once (tests/test_pairs.py pins this with an accumulator; the STATIC
-plan prints the subtree under both join sides, which is why the plan tests
-count runtime reuse, not textual FileScan occurrences).
+exactly once (tests/test_pairs.py counts its rows with an accumulator;
+tests/test_plans.py pins one ArrowEvalPython node and one FileScan in the
+executed plan).
 
 Pair-set equivalence with the unchunked double-explode (what the DuckDB
 oracle checks): for distinct members x, y of one bucket with chunks cx <= cy,

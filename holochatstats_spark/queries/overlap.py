@@ -71,6 +71,13 @@ def common_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _type_set():
+    """Per-user distinct ``event_type`` array, NULL included (as the twins'
+    DISTINCT / GROUP BY keep it): ``collect_set`` skips NULL values but not
+    a struct holding one."""
+    return F.collect_set(F.struct("event_type"))["event_type"].alias("types")
+
+
 # ---------------------------------------------------------------------------
 # J7 — N×N overlap matrix as one self-join (reference builds it with N²
 # Python set intersections, api.py:1556-1615).
@@ -108,13 +115,15 @@ def overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, unchanged DuckDB twin. Guide §2.4/§1.2.
     """
     ev = load_table(spark, sf_dir, "events")
+    # type_b keeps a NULL type, type_a does not: the twin's sizes join
+    # (s.event_type = p.type_a) drops NULL type_a rows
     per_user = ev.groupBy("user_id").agg(
-        F.collect_set("event_type").alias("types")
+        F.collect_set("event_type").alias("types_a"), _type_set()
     )
     from pyspark.sql import Window
 
     pairs = (
-        per_user.select(F.col("types"), F.explode("types").alias("type_a"))
+        per_user.select(F.col("types"), F.explode("types_a").alias("type_a"))
         .select(F.col("type_a"), F.explode("types").alias("type_b"))
         .groupBy("type_a", "type_b")
         .agg(F.count("*").alias("n_common"))
@@ -177,15 +186,16 @@ def exclusive_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     join → 1 FileScan, no join. Guide §1.2/§2.4.
     """
     ev = load_table(spark, sf_dir, "events")
+    # exclusive = one non-NULL type, as the twin's MIN and COUNT(DISTINCT)
+    # see it (both skip NULL); the NULL type's row gets n_exclusive 0, as
+    # its LEFT JOIN does
     sets = ev.groupBy("user_id").agg(
-        F.collect_set("event_type").alias("types")
+        (F.min("event_type") == F.max("event_type")).alias("is_exclusive"),
+        _type_set(),
     )
-    exploded = sets.select(
-        (F.size("types") == 1).alias("is_exclusive"),
-        F.explode("types").alias("event_type"),
-    )
+    exploded = sets.select("is_exclusive", F.explode("types").alias("event_type"))
     counts = exploded.groupBy("event_type").agg(
-        F.count(F.when(F.col("is_exclusive"), 1))
+        F.count(F.when(F.col("is_exclusive") & F.col("event_type").isNotNull(), 1))
         .cast("bigint")
         .alias("n_exclusive"),
         F.count("*").cast("bigint").alias("n_total"),

@@ -59,7 +59,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-scan aggregate; filter + projection push to the parquet scan."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
+        li.where(F.col("l_shipdate") <= F.expr("TIMESTAMP_NTZ'1998-09-02 00:00:00'"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             round2(F.sum("l_quantity")).alias("sum_qty"),
@@ -300,10 +300,10 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment") == "BUILDING"
     )
     o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
+        F.col("o_orderdate") < F.expr("TIMESTAMP_NTZ'1998-03-15 00:00:00'")
     )
     li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp")
+        F.col("l_shipdate") > F.expr("TIMESTAMP_NTZ'1995-03-15 00:00:00'")
     )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)

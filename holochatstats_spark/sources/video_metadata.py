@@ -39,8 +39,10 @@ def read_video_metadata(spark: SparkSession, path: str) -> DataFrame:
 
     end_time is the UTC wall clock of the parsed ISO-8601 instant as a
     ``timestamp_ntz``: ``…Z`` and ``…+09:00`` spellings of one instant give
-    one value under every session time zone. (A string without an offset
-    is read by ``to_timestamp`` in the session time zone.)"""
+    one value under every session time zone, and a date-time without an
+    offset is read as UTC (appending ``Z`` parses only when the string has
+    no offset of its own; otherwise ``to_timestamp`` honours the offset and
+    raises on a malformed string)."""
     raw = spark.read.text(path, wholetext=True)
     parsed = raw.select(
         F.regexp_extract(F.input_file_name(), r"([^/]+?)\.json$", 1).alias(
@@ -55,7 +57,8 @@ def read_video_metadata(spark: SparkSession, path: str) -> DataFrame:
         "video_id",
         F.col("meta.title").alias("title"),
         F.expr(
-            "timestampadd(MICROSECOND, unix_micros(to_timestamp(meta.end_time)),"
+            "timestampadd(MICROSECOND, unix_micros(coalesce("
+            "try_to_timestamp(meta.end_time || 'Z'), to_timestamp(meta.end_time))),"
             " TIMESTAMP_NTZ'1970-01-01') AS end_time"
         ),
         F.col("meta.duration").alias("duration_sec"),

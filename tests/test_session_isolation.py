@@ -14,9 +14,7 @@ from __future__ import annotations
 import datetime as dt
 import gzip
 import json
-import shutil
 
-import duckdb
 import pytest
 
 from holochatstats_spark.operators.ingest import build_user_data
@@ -24,9 +22,8 @@ from holochatstats_spark.queries import load_all_queries
 from holochatstats_spark.sources.chat_logs import read_chat_logs
 from holochatstats_spark.sources.video_metadata import read_video_metadata
 from holochatstats_spark.sources.writers import write_month_partitioned
-from holochatstats_spark.tables import TABLES
 from holochatstats_spark.testing import compare_query, duck_connection, normalize
-from tests.conftest import SF_SMOKE
+from tests.conftest import sf_copy
 
 TZ = "Asia/Tokyo"
 # 2026-01-31 23:30 UTC = 2026-02-01 08:30 in Tokyo
@@ -39,23 +36,10 @@ def _session(spark, tz):
     return s
 
 
-def _sf_copy(d, table: str, select: str) -> str:
-    """sf0.001 copied to ``d``, ``table`` rewritten by DuckDB from ``select``
-    (which reads the original as ``src``)."""
-    for t in TABLES:
-        if t != table:
-            shutil.copy(f"{SF_SMOKE}/{t}.parquet", d / f"{t}.parquet")
-    duckdb.execute(
-        f"COPY (WITH src AS (SELECT * FROM '{SF_SMOKE}/{table}.parquet') {select})"
-        f" TO '{d}/{table}.parquet' (FORMAT PARQUET)"
-    )
-    return str(d)
-
-
 @pytest.fixture(scope="module")
 def month_crossing_sf(tmp_path_factory):
     """sf0.001 with events.ts shifted +30 days."""
-    return _sf_copy(
+    return sf_copy(
         tmp_path_factory.mktemp("sf_month_crossing"),
         "events",
         "SELECT * REPLACE (ts + INTERVAL 30 DAY AS ts) FROM src",
@@ -136,17 +120,19 @@ def test_video_end_time_is_the_utc_wall_clock_of_any_offset(spark, tmp_path):
     payload = {
         "vidZ": {"title": "z", "end_time": "2026-01-31T23:30:00Z", "duration": 60},
         "vidJ": {"title": "j", "end_time": "2026-02-01T08:30:00+09:00", "duration": 60},
+        # no offset: read as UTC, not in the session zone
+        "vidU": {"title": "u", "end_time": "2026-01-31T23:30:00", "duration": 60},
     }
     (meta / "ch1.json").write_text(json.dumps(payload))
 
     got = {r["video_id"]: r["end_time"] for r in read_video_metadata(session, str(meta)).collect()}
-    assert got == {"vidZ": dt.datetime(2026, 1, 31, 23, 30), "vidJ": dt.datetime(2026, 1, 31, 23, 30)}
+    assert got == dict.fromkeys(["vidZ", "vidJ", "vidU"], dt.datetime(2026, 1, 31, 23, 30))
 
 
 def test_tokenizer_ignores_escaped_string_literals_conf(spark, tmp_path):
     # with escapedStringLiterals on, a regex passed through SQL text keeps
     # its doubled backslash and no longer matches whitespace runs
-    sf = _sf_copy(
+    sf = sf_copy(
         tmp_path,
         "documents",
         "SELECT * FROM src UNION ALL SELECT 100001, 'A  b\tc', 'en', 'web', 6"

@@ -6,9 +6,13 @@ this process), the warm build (an immediate rebuild) and the Spark jobs
 launched by the cold build (a job group around it); capture
 .explain("formatted") to plans/<round>/<query>_<tag>.txt, then time the
 computation with the noop sink (guide §1.4) min-of-N, labelled via
-setJobDescription. Prints one JSON line with the noop timings (so
-sink/collect overhead is visible separately from bench.py's collect()
-timings) and the per-query build record.
+setJobDescription. Finally collect the query once and write the plan that
+ran to plans/<round>/<query>_<tag>.json: the operator sequence (codegen
+stage ids dropped, so two runs diff cleanly), the scan/exchange/reuse
+counts, every node's SQL metrics, the Catalyst phase times and the build
+record. Prints one JSON line with the noop timings (so sink/collect
+overhead is visible separately from bench.py's collect() timings) and the
+per-query build record.
 
 Usage: PLANS_DIR=plans/<round> python tools/profile_bench.py <tag> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
@@ -26,6 +30,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from holochatstats_spark.plans.walker import (
+    catalyst_phases_ms,
+    plan_counts,
+    walk_final_plan,
+)
 from holochatstats_spark.queries import load_all_queries
 from holochatstats_spark.session import get_spark
 
@@ -82,9 +91,12 @@ def main() -> None:
             "warm_build_ms": round((t2 - t1) * 1e3, 1),
             "build_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
         }
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
+            f.write(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+            )
         best = float("inf")
         for i in range(n_runs):
             spark.sparkContext.setJobDescription(f"profile:{name}")
@@ -94,14 +106,28 @@ def main() -> None:
             best = min(best, time.time() - t0)
         spark.sparkContext.setJobDescription(None)
         timings[name] = round(best, 3)
-        # post-execution plan: AQE final stages incl. ReusedExchange nodes
+        # the plan that ran: AQE final stages incl. ReusedExchange nodes
         # (the noop writes ran their own executions, so collect this one)
         df.collect()
-        final = df._jdf.queryExecution().executedPlan().toString()
-        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
-            f.write("\n\n== Executed Plan (post-AQE) ==\n")
-            f.write(final)
+        nodes = walk_final_plan(df)
+        ops = [
+            "WholeStageCodegen" if n["name"].startswith("WholeStageCodegen") else n["name"]
+            for n in nodes
+        ]
+        with open(os.path.join(plans_dir, f"{name}_{tag}.json"), "w") as f:
+            json.dump(
+                {
+                    "query": name,
+                    "sf_dir": sf_dir,
+                    "build": builds[name],
+                    "catalyst_ms": catalyst_phases_ms(df),
+                    "operators": ops,
+                    "counts": plan_counts(nodes),
+                    "nodes": [{**n, "name": op} for n, op in zip(nodes, ops)],
+                },
+                f,
+                indent=1,
+            )
 
     print(
         json.dumps(
