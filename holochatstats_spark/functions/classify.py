@@ -8,6 +8,14 @@ Parity notes vs the reference:
 - F1 `categorize_message` (chat_parser.py:60-93): ordered short-circuit
   reproduced exactly with a when() chain; Unicode script classes use
   Java's \\p{IsHiragana} etc., equivalent to Python `regex`'s \\p{Hiragana}.
+  The reference lowercases before matching; here the regexes run on the
+  trimmed message as is. Lowercasing moves no character into or out of a
+  script or number class (tests/test_classify.py checks every code point
+  that `lower` changes), so only the laugh class depends on case, and it
+  lists both cases (`^[wWｗＷ]+$`). Spark 4's `lower` goes through
+  ICU case mapping, whose first use in a JVM loads ICU data on every task
+  thread (seconds on a fresh executor); the classifier needs none of it.
+  The DuckDB twin keeps `lower(...)`, as the reference does.
 - F2 `_is_pure_emoji` (chat_parser.py:43-57): a curated emoji-codepoint
   class stands in for the `emoji` library's full database (documented
   divergence; the library is not a dependency).
@@ -58,7 +66,7 @@ def is_pure_emoji(msg: Column) -> Column:
 
 _JP_SCRIPT = "[\\p{IsHiragana}\\p{IsKatakana}\\p{IsHan}]"
 _JP_PUNCT = "[！？]"
-_JP_LAUGH = "^[wｗ]+$"
+_JP_LAUGH = "^[wWｗＷ]+$"  # both cases: no lower() before matching
 _KR_SCRIPT = "[\\p{IsHangul}]"
 _RU_SCRIPT = "[\\p{IsCyrillic}]"
 # Python str.isnumeric() ~ Unicode Nd/Nl/No (chat_parser.py:91)
@@ -77,19 +85,18 @@ def categorize_message(msg: Column) -> Column:
     Returns NULL for null/blank, else one of CATEGORIES.
     """
     stripped = F.trim(msg)
-    lowered = F.lower(stripped)
     return (
         F.when(msg.isNull() | (stripped == ""), F.lit(None).cast("string"))
         .when(is_pure_emoji(stripped), "emoji")
         .when(
-            F.regexp_like(lowered, F.lit(_JP_SCRIPT))
-            | F.regexp_like(lowered, F.lit(_JP_PUNCT))
-            | F.regexp_like(lowered, F.lit(_JP_LAUGH)),
+            F.regexp_like(stripped, F.lit(_JP_SCRIPT))
+            | F.regexp_like(stripped, F.lit(_JP_PUNCT))
+            | F.regexp_like(stripped, F.lit(_JP_LAUGH)),
             "jp",
         )
-        .when(F.regexp_like(lowered, F.lit(_KR_SCRIPT)), "kr")
-        .when(F.regexp_like(lowered, F.lit(_RU_SCRIPT)), "ru")
-        .when(F.regexp_like(lowered, F.lit(_NUMERIC)), "number")
+        .when(F.regexp_like(stripped, F.lit(_KR_SCRIPT)), "kr")
+        .when(F.regexp_like(stripped, F.lit(_RU_SCRIPT)), "ru")
+        .when(F.regexp_like(stripped, F.lit(_NUMERIC)), "number")
         .otherwise("es_en_id")
     )
 

@@ -1,5 +1,4 @@
 from holochatstats_spark.streaming.ingest_stream import (  # noqa: F401
     stream_messages,
-    stream_running_user_totals,
     stream_user_counters,
 )

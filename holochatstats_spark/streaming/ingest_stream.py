@@ -17,7 +17,20 @@ Design:
   than the watermark are dropped;
 - the per-window counters roll up to the batch A1 frame by summing over
   windows (counters are associative; last_message_at is a max) — the
-  downstream gold builds are unchanged.
+  downstream gold builds are unchanged;
+- micro-batches are bounded in bytes (``MAX_BYTES_PER_TRIGGER``, 256 MiB
+  of gzipped replay), not in files. What a batch costs in read work and
+  memory grows with its bytes, and one replay is a few KB for a short
+  stream and several MB for a long one, so a file count says little about
+  either. Every batch also pays a fixed state-store commit over all
+  shuffle partitions (a versioned delta file per partition), so a file cap
+  turns a landing of many small replays into many near-empty batches that
+  each pay that commit. 256 MiB of gzipped replay JSON is ~1-2.5 GB
+  decoded, 3-13 million messages at 20-80 compressed bytes each: one
+  night's downloads catch up in one or a few batches, and a backlog of
+  days (hundreds of GB after an outage) is still cut into batches whose
+  decoded input and state updates stay small beside a cluster's memory.
+  A gzipped replay is not splittable, so a batch scans one task per file.
 
 At scale this runs continuously against the landing zone with checkpoint
 state in the stream's checkpointLocation; the batch path (operators/
@@ -36,12 +49,17 @@ from holochatstats_spark.operators.ingest import classify_messages, message_coun
 from holochatstats_spark.sources.chat_logs import MESSAGE_SCHEMA, with_video_ts
 
 
+# Upper bound on the compressed replay bytes one micro-batch reads.
+MAX_BYTES_PER_TRIGGER = 256 * 1024 * 1024
+
+
 def stream_messages(spark: SparkSession, path: str) -> DataFrame:
     """Streaming twin of sources/chat_logs.read_chat_logs: same schema,
-    same video_id/ts projection."""
+    same video_id/ts projection. Each micro-batch reads at most
+    ``MAX_BYTES_PER_TRIGGER`` bytes of landed files (at least one file)."""
     return with_video_ts(
         spark.readStream.schema(MESSAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
+        .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
         .json(path)
     )
 
@@ -69,37 +87,3 @@ def stream_user_counters(
         "video_id",
         "user_id",
     ).agg(*message_counters(), F.max("ts").alias("last_message_at"))
-
-
-def stream_running_user_totals(messages: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState — the
-    Spark-native form of the reference's hand-rolled dict-state chat
-    iterator (chat_downloader.py:41-132 keeps per-user running counters in
-    Python dicts across an unbounded replay stream).
-
-    Per user, GroupState holds the running message total; every
-    micro-batch folds its Arrow batches into the state and emits the
-    updated total (update output mode). State is per-key and partitioned —
-    1000 executors each hold their keys' state, checkpointed with the
-    query; the reference's equivalent was a single process's memory.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        total = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            total += int(len(pdf))
-        state.update((total,))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "running_total": [total]}
-        )
-
-    return messages.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id string, running_total bigint",
-        stateStructType="total bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

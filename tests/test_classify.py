@@ -135,3 +135,116 @@ def test_clean_chat_for_ai(spark):
         df = spark.createDataFrame([(raw,)], "msg string")
         got = df.select(clean_chat_for_ai(F.col("msg")).alias("c")).first()["c"]
         assert got == want
+
+
+# --- F1 without lower(): pinned against the lower()-based chain -------------
+
+
+def _categorize_with_lower(msg):
+    """categorize_message as it was before the lower() call was dropped,
+    kept verbatim as the reference for the ICU-free chain."""
+    from holochatstats_spark.functions.classify import (
+        _JP_PUNCT,
+        _JP_SCRIPT,
+        _KR_SCRIPT,
+        _NUMERIC,
+        _RU_SCRIPT,
+    )
+
+    _JP_LAUGH = "^[wｗ]+$"
+    stripped = F.trim(msg)
+    lowered = F.lower(stripped)
+    return (
+        F.when(msg.isNull() | (stripped == ""), F.lit(None).cast("string"))
+        .when(is_pure_emoji(stripped), "emoji")
+        .when(
+            F.regexp_like(lowered, F.lit(_JP_SCRIPT))
+            | F.regexp_like(lowered, F.lit(_JP_PUNCT))
+            | F.regexp_like(lowered, F.lit(_JP_LAUGH)),
+            "jp",
+        )
+        .when(F.regexp_like(lowered, F.lit(_KR_SCRIPT)), "kr")
+        .when(F.regexp_like(lowered, F.lit(_RU_SCRIPT)), "ru")
+        .when(F.regexp_like(lowered, F.lit(_NUMERIC)), "number")
+        .otherwise("es_en_id")
+    )
+
+
+def _category_mismatches(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "msg string")
+    return [
+        (r["msg"], r["ref"], r["got"])
+        for r in df.select(
+            "msg",
+            _categorize_with_lower(F.col("msg")).alias("ref"),
+            categorize_message(F.col("msg")).alias("got"),
+        )
+        .where(~F.col("ref").eqNullSafe(F.col("got")))
+        .collect()
+    ]
+
+
+def test_categorize_without_lower_matches_lowered_chain_on_cased_code_points(spark):
+    """Every code point that Spark's lower() changes, alone, doubled, after
+    an ASCII w and before a fullwidth ｗ, classifies as the lower()-based
+    chain classifies it. Code points come from spark.range via UTF-32
+    (a leading BOM keeps U+FEFF itself from being read as one); surrogates
+    are not code points of a string."""
+    cased = [
+        r["c"]
+        for r in spark.range(0, 0x110000)
+        .where("id < 55296 OR id > 57343")
+        .selectExpr("decode(unhex('0000FEFF' || lpad(hex(id), 8, '0')), 'UTF-32') AS c")
+        .where("lower(c) != c")
+        .collect()
+    ]
+    assert len(cased) > 1000 and "W" in cased and "Ｗ" in cased and "Я" in cased
+    variants = [v for c in cased for v in (c, c + c, "w" + c, c + "ｗ")]
+    assert _category_mismatches(spark, variants) == []
+
+
+def test_categorize_without_lower_matches_lowered_chain_on_message_pools(spark):
+    from benchmark.gen_chat import MESSAGE_POOL
+    from holochatstats_spark.operators.synth import MESSAGES
+
+    from tests.test_classify_fuzz import _corpus
+
+    pool = (
+        [m for m, _ in MESSAGE_POOL]
+        + [m for m, _ in MESSAGES]
+        + [m for _, m, _ in _corpus()]
+        + [m for m, _ in CATEGORIZE_CASES]
+        + ["WWW", "ＷＷＷ", "wWｗＷ", "Ww!", "ПРИВЕТ", "ⅫⅣ", "Ⅻa"]
+    )
+    assert _category_mismatches(spark, pool) == []
+
+
+def _expression_node_names(plan) -> set[str]:
+    """Names of every Catalyst expression node in a logical plan tree."""
+    names, plans, exprs = set(), [plan], []
+    while plans:
+        p = plans.pop()
+        exprs.extend(p.expressions().apply(i) for i in range(p.expressions().size()))
+        plans.extend(p.children().apply(i) for i in range(p.children().size()))
+    while exprs:
+        e = exprs.pop()
+        names.add(e.nodeName())
+        exprs.extend(e.children().apply(i) for i in range(e.children().size()))
+    return names
+
+
+def test_classify_messages_plans_no_lower(spark):
+    """The classifier reaches no case mapping: Spark 4's lower() runs ICU,
+    whose first use in a JVM loads its data on every task thread. Checked on
+    the analyzed expression tree; the reference chain is the control."""
+    from holochatstats_spark.operators.ingest import classify_messages
+
+    msgs = spark.createDataFrame(
+        [("chat", None, "ｗｗｗ")], "message_type string, message_category string, message string"
+    )
+    classified = classify_messages(msgs)._jdf.queryExecution().analyzed()
+    reference = msgs.select(_categorize_with_lower(F.col("message")))._jdf.queryExecution().analyzed()
+    assert "Lower" in _expression_node_names(reference)
+    names = _expression_node_names(classified)
+    assert {"RLike", "StringTrim", "CaseWhen"} <= names  # the walk reached the chain
+    assert "Lower" not in names

@@ -1,6 +1,7 @@
 """Structured Streaming ingest: the windowed A1 counter aggregate over a
 file-source stream must reproduce the batch counters when rolled up
-(associative-counter contract, streaming/ingest_stream.py)."""
+(associative-counter contract, streaming/ingest_stream.py), and a landing
+of many small replays is read in batches bounded by bytes, not by files."""
 
 from __future__ import annotations
 
@@ -9,7 +10,12 @@ import json
 
 from pyspark.sql import functions as F
 
-from holochatstats_spark.streaming import stream_messages, stream_user_counters
+from holochatstats_spark.functions.classify import COUNTED_CATEGORIES
+from holochatstats_spark.operators.ingest import build_user_data
+from holochatstats_spark.sources.chat_logs import read_chat_logs
+from holochatstats_spark.streaming import ingest_stream, stream_messages, stream_user_counters
+
+COUNTERS = (*(f"{c}_count" for c in COUNTED_CATEGORIES), "total_message_count")
 
 
 def _write_log(path, video_id, records):
@@ -79,42 +85,77 @@ def test_streaming_counters_match_batch_rollup(spark, tmp_path):
     assert u2["last_at"].microsecond == 0 and u2["last_at"].second == 8
 
 
-def test_stateful_running_totals_accumulate_across_microbatches(spark, tmp_path):
-    from holochatstats_spark.streaming.ingest_stream import (
-        stream_running_user_totals,
-    )
+def _many_small_replays(landing, n_videos=20):
+    """n_videos one-KB-ish replays, more files than a file-count cap of 16
+    took per batch. Users recur across videos; half the categories are
+    left for the classifier."""
+    msgs = [("こんにちは", "jp"), ("ｗｗｗ", None), ("привет", None), ("hi", "es_en_id"), ("😀", None)]
+    for v in range(n_videos):
+        _write_log(
+            landing,
+            f"vid{v:02d}",
+            [
+                _rec(f"u{(v + i) % 7}", v * 600_000_000 + i * 7_000_000, message=m, cat=c)
+                for i, (m, c) in enumerate(msgs * 3)
+            ],
+        )
 
-    landing = tmp_path / "landing2"
-    landing.mkdir()
-    # two files + maxFilesPerTrigger=1 -> two micro-batches within ONE
-    # availableNow run; u1 appears in both, so its GroupState must carry
-    # the first batch's total into the second
-    _write_log(landing, "vidA", [_rec("u1", i * 1_000_000) for i in range(3)])
-    _write_log(landing, "vidB", [_rec("u1", 10_000_000 + i) for i in range(2)])
 
-    from holochatstats_spark.sources.chat_logs import MESSAGE_SCHEMA
-    from pyspark.sql import functions as F
-
-    src = (
-        spark.readStream.schema(MESSAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.timestamp_micros(F.col("timestamp")))
-    )
+def _stream_batches_and_rollup(spark, landing, name):
+    """Catch up on ``landing`` with availableNow; the non-empty micro-batch
+    count and the window rollup per (channel, video, user)."""
     q = (
-        stream_running_user_totals(src)
+        stream_user_counters(stream_messages(spark, str(landing)), channel_id="ch1")
         .writeStream.format("memory")
-        .queryName("state_totals")
-        .outputMode("update")
+        .queryName(name)
+        .outputMode("complete")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-
-    totals = sorted(
-        r["running_total"]
-        for r in spark.table("state_totals").where(F.col("user_id") == "u1").collect()
+    assert q.awaitTermination(180), "the catch-up did not finish"
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    rollup = (
+        spark.table(name)
+        .groupBy("channel_id", "video_id", "user_id")
+        .agg(*[F.sum(c).cast("int").alias(c) for c in COUNTERS], F.max("last_message_at").alias("last_message_at"))
     )
-    # one emission per micro-batch: 3 after vidA, 5 after vidA+vidB —
-    # the 5 can only exist if state crossed the batch boundary
-    assert totals == [3, 5]
+    return len(batches), _keyed(rollup)
+
+
+def _keyed(df):
+    cols = ["channel_id", "video_id", "user_id", *COUNTERS, "last_message_at"]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _batch_silver(spark, landing):
+    return _keyed(build_user_data(read_chat_logs(spark, str(landing), channel_id="ch1")))
+
+
+def test_many_small_replays_catch_up_in_one_batch(spark, tmp_path):
+    """A micro-batch is bounded by bytes: 20 small replays, more files than
+    the old 16-file cap, are one batch, and each batch pays a state-store
+    commit over every shuffle partition whatever its size."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _many_small_replays(landing)
+    assert len(list(landing.iterdir())) == 20
+    n_batches, rollup = _stream_batches_and_rollup(spark, landing, "many_replays_one_batch")
+    assert n_batches == 1
+    assert rollup == _batch_silver(spark, landing)
+
+
+def test_byte_cap_below_one_replay_splits_the_catch_up(spark, tmp_path, monkeypatch):
+    """The cap is what bounds a batch: below one file's size, the same
+    landing takes one batch per file (a batch reads at least one file),
+    and the rollup is unchanged. The run uses 4 state partitions on a
+    separate session, since every batch commits each one."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _many_small_replays(landing)
+    smallest = min(f.stat().st_size for f in landing.iterdir())
+    monkeypatch.setattr(ingest_stream, "MAX_BYTES_PER_TRIGGER", smallest - 1)
+    narrow = spark.newSession()
+    narrow.conf.set("spark.sql.shuffle.partitions", "4")
+    n_batches, rollup = _stream_batches_and_rollup(narrow, landing, "many_replays_byte_capped")
+    assert n_batches == 20
+    assert rollup == _batch_silver(spark, landing)
