@@ -5,9 +5,9 @@
   training-data-pipeline surface (69 entries — see COVERAGE.md for the
   §2-id → query map), keyed by name, least-recently-verified first.
 - ``oracle_sql()``: matching ANSI SQL for the DuckDB oracle (same column
-  names/types; floats rounded identically on both sides). Rows-only
-  queries (ml_forecast, channel_clustering, daily_event_rollup_approx)
-  are intentionally absent here — nondeterministic or sketch-based.
+  names/types; floats rounded identically on both sides). The 2 rows-only
+  queries (channel_clustering, daily_event_rollup_approx) are
+  intentionally absent here — a Python graph algorithm and a sketch.
 """
 
 from __future__ import annotations

@@ -61,9 +61,11 @@ def round_half_up(c: Column, scale: int) -> Column:
 
 
 def round_half_up_sql(expr: str, scale: int) -> str:
-    """:func:`round_half_up` over a SQL-text expression, as SQL text."""
+    """:func:`round_half_up` over a SQL-text expression, as SQL text that
+    Spark and DuckDB read alike (``5e-1`` is a DOUBLE in both; a bare
+    ``0.5`` is a DECIMAL in Spark, and ``0.5D`` is Spark-only)."""
     p = 10**scale
-    return f"FLOOR(CAST({expr} AS DOUBLE) * {p} + 0.5D) / {p}"
+    return f"FLOOR(CAST({expr} AS DOUBLE) * {p} + 5e-1) / {p}"
 
 
 def pct_round(num: Column, den: Column, scale: int = 2) -> Column:

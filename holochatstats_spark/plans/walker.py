@@ -50,7 +50,8 @@ def walk_final_plan(df: DataFrame) -> list[dict]:
     indices of the nearest non-wrapper operators below it (its plan
     children and subqueries). An ``Exchange`` also carries
     ``partitioning`` (e.g. ``"SinglePartition"``, ``"HashPartitioning"``)
-    and an aggregate ``grouping_keys``, its key column names (``[]`` for a
+    and ``partitions``, its count before AQE coalesces the read, and an
+    aggregate ``grouping_keys``, its key column names (``[]`` for a
     keyless aggregate)."""
     nodes: list[dict] = []
     todo = [(df._jdf.queryExecution().executedPlan(), [])]
@@ -63,7 +64,9 @@ def walk_final_plan(df: DataFrame) -> list[dict]:
         i = len(nodes)
         rec = {"name": node.nodeName(), "metrics": _metrics(node), "children": []}
         if rec["name"] == "Exchange":
-            rec["partitioning"] = node.outputPartitioning().getClass().getSimpleName().rstrip("$")
+            part = node.outputPartitioning()
+            rec["partitioning"] = part.getClass().getSimpleName().rstrip("$")
+            rec["partitions"] = part.numPartitions()
         elif rec["name"] in _AGGREGATES:
             rec["grouping_keys"] = [e.name() for e in _scala_seq(node.groupingExpressions())]
         nodes.append(rec)

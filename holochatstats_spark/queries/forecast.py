@@ -1,8 +1,7 @@
-"""Deterministic forecasting (V10/V11): the oracle-friendly statistical
-path of the reference's forecaster (forecaster.py:318-351 — trend + z-based
-intervals). The LSTM path (V9) is nondeterministic and lives in
-operators/forecast_ml.py behind applyInPandas, excluded from the oracle per
-SURVEY §5.
+"""Deterministic forecasting (V9-V11): the statistical path of the
+reference's forecaster (forecaster.py:318-351 — trend + z-based intervals),
+and in place of its per-channel LSTM (V9, torch + MC-dropout) a ridge
+AR(3) written as SQL text, so every query here is hash-checked.
 
 Linear-trend fit uses regr_slope/regr_intercept — native aggregates in both
 Spark and DuckDB, computed from distributed moment sums (no per-group
@@ -10,6 +9,8 @@ collect), so a per-channel fit at 100 TB is one groupBy.
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +20,28 @@ from holochatstats_spark.queries import register
 from holochatstats_spark.tables import load_table
 
 _Z90 = 1.645  # reference's z-interval, forecaster.py:338-344
+
+
+# The monthly series (series, m, x) both forecasters fit: the oracle CTE
+# and its Spark twin.
+_MONTHLY_SQL = """monthly AS (
+      SELECT o_orderpriority AS series,
+             date_trunc('month', o_orderdate) AS m,
+             SUM(o_totalprice) AS x
+      FROM orders GROUP BY 1, 2
+    )"""
+
+
+def _monthly(orders: DataFrame) -> DataFrame:
+    return orders.groupBy(
+        F.col("o_orderpriority").alias("series"),
+        F.date_trunc("month", F.col("o_orderdate")).alias("m"),
+    ).agg(F.sum("o_totalprice").alias("x"))
+
+
+def _horizons(spark: SparkSession) -> DataFrame:
+    """The forecast steps h = 1, 2, 3."""
+    return spark.range(1, 4).select(F.col("id").cast("int").alias("h"))
 
 
 @register(
@@ -106,13 +129,8 @@ _EWM_VAR = f"{_fsum(_EWM_SQ_DEV)} / CAST(n_i AS DOUBLE)"
 
 @register(
     "ewm_forecast",
-    oracle="""
-    WITH monthly AS (
-      SELECT o_orderpriority AS series,
-             date_trunc('month', o_orderdate) AS m,
-             SUM(o_totalprice) AS x
-      FROM orders GROUP BY 1, 2
-    ), idx AS (
+    oracle=f"""
+    WITH {_MONTHLY_SQL}, idx AS (
       SELECT series, x,
              ROW_NUMBER() OVER (PARTITION BY series ORDER BY m) - 1 AS i,
              COUNT(*) OVER (PARTITION BY series) AS n,
@@ -159,11 +177,7 @@ _EWM_VAR = f"{_fsum(_EWM_SQ_DEV)} / CAST(n_i AS DOUBLE)"
     tags=("bench",),
 )
 def ewm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.col("o_orderpriority").alias("series"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("m"),
-    ).agg(F.sum("o_totalprice").alias("x"))
+    monthly = _monthly(load_table(spark, sf_dir, "orders"))
     # r22 (guide §2.4): the r21 shape ran a 4-function window over
     # (series) and THEN a 6-aggregate groupBy — two sorted shuffles of the
     # monthly rows. A series is bounded by the calendar (one row per
@@ -207,8 +221,7 @@ def ewm_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN n_i >= 2 THEN (element_at(s, n_i) - element_at(s, 1)) / n_i"
         " ELSE 0.0D END AS trend",
     )
-    horizons = spark.range(1, 4).select(F.col("id").cast("int").alias("h"))
-    fc = fit.crossJoin(F.broadcast(horizons)).selectExpr(
+    fc = fit.crossJoin(F.broadcast(_horizons(spark))).selectExpr(
         "series",
         "n_months",
         "h",
@@ -355,21 +368,139 @@ def monthly_spine_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# V9 — grouped-map ML forecaster (rows-only: nondeterministic across BLAS
-# builds in principle, and the reference's LSTM (forecaster.py:201-273) is
-# torch + MC-dropout — excluded from the hash oracle per SURVEY §5).
+# V9 — per-series ML forecaster. The reference retrains a per-channel torch
+# LSTM nightly (forecaster.py:201-273); torch is not a dependency, so the
+# model shipped here is a deterministic ridge AR(3) over the standardized
+# monthly series, recursive over 3 steps. Its fit is closed-form arithmetic
+# over 14 moment sums, so the whole model is SQL text that Spark
+# (selectExpr / F.expr) and the DuckDB twin both run, one string per
+# stage: no Python stage, and the query is hash-checked.
+#
+# Model, per series of n rows ordered by month (rows, not calendar months:
+# a missing month is skipped, not zero):
+# - z = (x - mu) / sigma, with sigma the population stddev (1 when it is 0);
+# - X = (lag-3 z, lag-2 z, lag-1 z, 1) and y = z over rows i > 3;
+#   beta = (XᵀX + λI)⁻¹ Xᵀy with λ = 1e-3 on all four diagonal entries,
+#   solved by Cramer's rule (24-term determinant expansions);
+# - forecasts feed back into the lag window 3 times, then pred*sigma + mu;
+# - n < 5 carries the last x forward ('carry_forward');
+# - rounding is half up to 2 decimals (floor(v*100 + 0.5)/100).
+# Every literal means the same in both engines: integers, or a double
+# written in exponent form (a bare 0.5 is a DECIMAL in Spark).
 # ---------------------------------------------------------------------------
+# One window order for every column, so Spark sorts the rows once.
+_SERIES = "PARTITION BY series ORDER BY m"
+_WHOLE = f"{_SERIES} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+# per row of monthly(series, m, x): its position and count, the series'
+# mean and population stddev, and the lags 1-3 of x
+_ML_ROW_COLUMNS = (
+    "series",
+    "x",
+    f"COUNT(*) OVER ({_WHOLE}) AS n",
+    f"ROW_NUMBER() OVER ({_SERIES}) AS i",
+    f"AVG(x) OVER ({_WHOLE}) AS mu",
+    f"stddev_pop(x) OVER ({_WHOLE}) AS sd",
+    *(f"LAG(x, {k}) OVER ({_SERIES}) AS x{k}" for k in (1, 2, 3)),
+)
+_SIGMA = "(CASE WHEN sd = 0 THEN 1 ELSE sd END)"
+
+
+def _z(x: str) -> str:
+    return f"(({x} - mu) / {_SIGMA})"
+
+
+# X's columns in order: z at lags 3, 2, 1, then the intercept; y is z
+_X = (_z("x3"), _z("x2"), _z("x1"), "1")
+_Y = _z("x")
+# the symmetric XᵀX + λI as column names, and the 4 entries of Xᵀy
+_A = [[f"a{min(j, k)}{max(j, k)}" for k in range(4)] for j in range(4)]
+_B = ("b0", "b1", "b2", "b3")
+
+
+def _fit_sum(term: str) -> str:
+    return f"SUM(CASE WHEN i > 3 THEN {term} END)"
+
+
+# per series: the 10 sums of XᵀX + λI, the 4 of Xᵀy, and the last 3 z (the
+# first forecast's lag window, oldest first)
+_ML_FIT_AGGS = (
+    "MAX(n) AS n",
+    "MAX(CASE WHEN i = n THEN x END) AS x_last",
+    "MAX(mu) AS mu",
+    f"MAX({_SIGMA}) AS sigma",
+    *(
+        f"{_fit_sum(f'{_X[j]} * {_X[k]}')}{' + 1e-3' if j == k else ''} AS {_A[j][k]}"
+        for j in range(4)
+        for k in range(j, 4)
+    ),
+    *(f"{_fit_sum(f'{x} * {_Y}')} AS {b}" for x, b in zip(_X, _B)),
+    *(f"MAX(CASE WHEN i = n THEN {_z(x)} END) AS w{j}" for j, x in enumerate(("x2", "x1", "x"))),
+)
+
+
+def _det4(m: list[list[str]]) -> str:
+    """Determinant of a 4x4 matrix of SQL terms: the permutation expansion."""
+    text = ""
+    for p in itertools.permutations(range(4)):
+        odd = sum(p[a] > p[b] for a in range(4) for b in range(a + 1, 4)) % 2
+        text += (" - " if odd else " + ") + " * ".join(m[r][p[r]] for r in range(4))
+    return f"({text[3:]})"
+
+
+# Cramer's rule: beta_k = det(A with column k replaced by Xᵀy) / det(A)
+_ML_BETAS = tuple(
+    f"{_det4([[_B[j] if c == k else _A[j][c] for c in range(4)] for j in range(4)])}"
+    f" / {_det4(_A)} AS beta{k}"
+    for k in range(4)
+)
+
+
+# in z units: the last 3 z, then 3 recursive steps, each an AR(3) over the
+# 3 values before it
+_Z_SEQ = ["w0", "w1", "w2"]
+for _ in range(3):
+    _ar = " + ".join(f"beta{j} * {w}" for j, w in enumerate(_Z_SEQ[-3:]))
+    _Z_SEQ.append(f"({_ar} + beta3)")
+_ML_FORECAST = (
+    f"CASE WHEN n < 5 THEN x_last ELSE (CASE h WHEN 1 THEN {_Z_SEQ[3]}"
+    f" WHEN 2 THEN {_Z_SEQ[4]} ELSE {_Z_SEQ[5]} END) * sigma + mu END"
+)
+# per (series, h): the output row
+_ML_OUTPUT_COLUMNS = (
+    "series",
+    "CAST(h AS INT) AS h",
+    f"{round_half_up_sql(_ML_FORECAST, 2)} AS forecast",
+    "CASE WHEN n < 5 THEN 'carry_forward' ELSE 'ridge_ar3' END AS model_version",
+    "CAST(n AS INT) AS n_months",
+)
+
+
 @register(
     "ml_forecast",
-    oracle=None,
+    oracle=f"""
+    WITH {_MONTHLY_SQL}, ml_rows AS (
+      SELECT {", ".join(_ML_ROW_COLUMNS)} FROM monthly
+    ), ml_fit AS (
+      SELECT series, {", ".join(_ML_FIT_AGGS)} FROM ml_rows GROUP BY series
+    ), ml_beta AS (
+      SELECT *, {", ".join(_ML_BETAS)} FROM ml_fit
+    )
+    SELECT {", ".join(_ML_OUTPUT_COLUMNS)}
+    FROM ml_beta CROSS JOIN (SELECT range AS h FROM range(1, 4))
+    ORDER BY series, h
+    """,
     survey="V9",
 )
 def ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from holochatstats_spark.operators.forecast_ml import forecast_per_series
-
-    o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.col("o_orderpriority").alias("series"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("m"),
-    ).agg(F.sum("o_totalprice").alias("x"))
-    return forecast_per_series(monthly).orderBy("series", "h")
+    fit = (
+        _monthly(load_table(spark, sf_dir, "orders"))
+        .selectExpr(*_ML_ROW_COLUMNS)
+        .groupBy("series")
+        .agg(*[F.expr(e) for e in _ML_FIT_AGGS])
+        .selectExpr("*", *_ML_BETAS)
+    )
+    return (
+        fit.crossJoin(F.broadcast(_horizons(spark)))
+        .selectExpr(*_ML_OUTPUT_COLUMNS)
+        .orderBy("series", "h")
+    )

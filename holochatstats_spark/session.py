@@ -6,12 +6,21 @@ and the library writes nothing into it: timestamps are UTC wall-clock
 query or source produces is that NTZ value, so no result depends on
 ``spark.sql.session.timeZone`` and nothing has to be pinned per build.
 
-Scale notes (100 TB): these configs are the local[32] test shape of the
+Scale notes (100 TB): these configs are the local test shape of the
 settings we would deploy cluster-side — AQE (on by default in Spark 4) for
 runtime coalescing and skew-join splitting, a generous broadcast threshold
 because every dimension table in the model (region/nation/supplier/part at
 TPC-H shape; channels/users in the reference's model, SURVEY.md §1.2) is
 orders of magnitude smaller than the fact tables.
+
+Two shuffle widths. Batch shuffles start at AQE's
+``coalescePartitions.initialPartitionNum`` (32 here) and coalesce down.
+A stateful stream runs its micro-batches without AQE, so its state-store
+count is ``spark.sql.shuffle.partitions`` (the core count here), fixed in
+its checkpoint at the first batch; an existing checkpoint keeps the count
+it recorded. A cluster sets both: the batch width from data volume (so
+post-shuffle partitions land ~128-256 MB, e.g. ~400k for a 100 TB
+shuffle) and the state width from state volume.
 """
 
 from __future__ import annotations
@@ -52,13 +61,12 @@ def get_spark(app_name: str = "holochatstats-spark") -> SparkSession:
     malformed value raises ``ValueError`` naming the variable."""
     cpus = _env_knob("SPARK_GRAFT_CPUS")
     driver_mem = _env_knob("SPARK_GRAFT_DRIVER_MEM")
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # Shuffle width: 32, the value every recorded bench used; AQE
-        # coalesces down. A cluster sizes it so post-shuffle partitions
-        # land ~128-256 MB (guide §2.2), e.g. ~400k for a 100 TB shuffle.
-        .config("spark.sql.shuffle.partitions", "32")
+        # Batch shuffle width: 32, the value every recorded bench used;
+        # AQE reads it for every batch shuffle and coalesces down.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dims here are KB-scale; broadcast aggressively. AQE will also
         # convert to broadcast at runtime when a side is small post-filter.
@@ -67,3 +75,9 @@ def get_spark(app_name: str = "holochatstats-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # State width: micro-batches run without AQE, so a stateful stream
+    # reads spark.sql.shuffle.partitions as its state-store count and
+    # freezes it into its checkpoint at the first batch. One store per
+    # core: every batch commits each store, whatever the state's size.
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark

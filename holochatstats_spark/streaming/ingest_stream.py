@@ -23,14 +23,20 @@ Design:
   memory grows with its bytes, and one replay is a few KB for a short
   stream and several MB for a long one, so a file count says little about
   either. Every batch also pays a fixed state-store commit over all
-  shuffle partitions (a versioned delta file per partition), so a file cap
+  state partitions (a versioned delta file per partition), so a file cap
   turns a landing of many small replays into many near-empty batches that
   each pay that commit. 256 MiB of gzipped replay JSON is ~1-2.5 GB
   decoded, 3-13 million messages at 20-80 compressed bytes each: one
   night's downloads catch up in one or a few batches, and a backlog of
   days (hundreds of GB after an outage) is still cut into batches whose
   decoded input and state updates stay small beside a cluster's memory.
-  A gzipped replay is not splittable, so a batch scans one task per file.
+  A gzipped replay is not splittable, so a batch scans one task per file;
+- the state width is ``spark.sql.shuffle.partitions``, not the batch
+  shuffle width: micro-batches run without AQE, and the first batch fixes
+  the count in the checkpoint. ``session.get_spark`` sets it to the core
+  count (batch shuffles start at AQE's ``initialPartitionNum``, 32), so
+  the catch-up commits one store per core. A cluster sizes it from the
+  state's volume, and the batch width from the data's.
 
 At scale this runs continuously against the landing zone with checkpoint
 state in the stream's checkpointLocation; the batch path (operators/

@@ -24,6 +24,7 @@ def test_queries_and_oracles_align():
     registry = load_all_queries()
     rows_only = {n for n, q in registry.items() if q.oracle is None}
     assert set(qs) == set(oracles) | rows_only
+    assert rows_only == {"channel_clustering", "daily_event_rollup_approx"}
 
 
 def test_registry_metadata():

@@ -57,7 +57,13 @@ MAX_SCANS = {
     "exclusive_users": 1,
 }
 BROADCAST_JOINS = ("shipping_priority", "chat_leaderboard", "recommend_topk")
-NATIVE = ("multimodal_features", "doc_token_stats", "minhash_lsh_pairs", "message_classification")
+NATIVE = (
+    "multimodal_features",
+    "doc_token_stats",
+    "minhash_lsh_pairs",
+    "message_classification",
+    "ml_forecast",
+)
 LSH_UDF = ("simhash_neardup_pairs", "embedding_neardup_lsh")
 PINNED = sorted({*MAX_SCANS, *BROADCAST_JOINS, *NATIVE, *LSH_UDF, "price_percentiles"})
 
@@ -113,7 +119,8 @@ def test_global_window_counts_as_unbounded_single_partition(spark):
 def test_native_query_paths_have_no_python_stage(executed):
     # multimodal feature extraction is fully native (guide §4.1) — the
     # mapInPandas stage only computed length/md5/modulo expressions, so ANY
-    # Python node reappearing here is a regression
+    # Python node reappearing here is a regression. ml_forecast's ridge
+    # AR(3) is SQL text, not a grouped-map (FlatMapGroupsInPandas) stage.
     for name in NATIVE:
         n = plan_counts(_nodes(executed, name))["python_eval_nodes"]
         assert n == 0, f"{name} gained {n} Python eval node(s)"

@@ -72,9 +72,7 @@ def test_oracle_queries_match_duckdb_under_tokyo(tokyo_pass):
 def test_rows_only_queries_match_utc_rows(spark, month_crossing_sf, tokyo_pass):
     utc = _session(spark, "UTC")
     registry = load_all_queries()
-    assert sorted(tokyo_pass[1]) == [
-        "channel_clustering", "daily_event_rollup_approx", "ml_forecast"
-    ]
+    assert sorted(tokyo_pass[1]) == ["channel_clustering", "daily_event_rollup_approx"]
     for name, tokyo_rows in tokyo_pass[1].items():
         df = registry[name].build(utc, month_crossing_sf)
         assert normalize(df.collect(), df.columns) == tokyo_rows, name

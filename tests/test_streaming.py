@@ -7,11 +7,13 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.classify import COUNTED_CATEGORIES
 from holochatstats_spark.operators.ingest import build_user_data
+from holochatstats_spark.plans.walker import walk_final_plan
 from holochatstats_spark.sources.chat_logs import read_chat_logs
 from holochatstats_spark.streaming import ingest_stream, stream_messages, stream_user_counters
 
@@ -147,15 +149,41 @@ def test_many_small_replays_catch_up_in_one_batch(spark, tmp_path):
 def test_byte_cap_below_one_replay_splits_the_catch_up(spark, tmp_path, monkeypatch):
     """The cap is what bounds a batch: below one file's size, the same
     landing takes one batch per file (a batch reads at least one file),
-    and the rollup is unchanged. The run uses 4 state partitions on a
-    separate session, since every batch commits each one."""
+    and the rollup is unchanged."""
     landing = tmp_path / "landing"
     landing.mkdir()
     _many_small_replays(landing)
     smallest = min(f.stat().st_size for f in landing.iterdir())
     monkeypatch.setattr(ingest_stream, "MAX_BYTES_PER_TRIGGER", smallest - 1)
-    narrow = spark.newSession()
-    narrow.conf.set("spark.sql.shuffle.partitions", "4")
-    n_batches, rollup = _stream_batches_and_rollup(narrow, landing, "many_replays_byte_capped")
+    n_batches, rollup = _stream_batches_and_rollup(spark, landing, "many_replays_byte_capped")
     assert n_batches == 20
     assert rollup == _batch_silver(spark, landing)
+
+
+def test_state_width_is_the_core_count_and_batch_width_stays_32(spark, tmp_path):
+    """get_spark's session gives a stateful stream one state store per core
+    (spark.sql.shuffle.partitions; micro-batches run without AQE), while a
+    batch aggregate still shuffles into AQE's 32 initial partitions."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _many_small_replays(landing, n_videos=2)
+    q = (
+        stream_user_counters(stream_messages(spark, str(landing)), channel_id="ch1")
+        .writeStream.format("memory")
+        .queryName("state_width")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180), "the catch-up did not finish"
+    (progress,) = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    (state,) = progress["stateOperators"]
+    cores = spark.sparkContext.defaultParallelism
+    assert state["numShufflePartitions"] == cores
+    if os.environ.get("SPARK_GRAFT_CPUS", "*") != "*":
+        assert cores == int(os.environ["SPARK_GRAFT_CPUS"])
+
+    batch = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    batch.collect()
+    exchanges = [n for n in walk_final_plan(batch) if n["name"] == "Exchange"]
+    assert [n["partitions"] for n in exchanges] == [32]
