@@ -51,12 +51,17 @@ def detect_communities(
     a channel whose every similarity fell below the edge threshold has no
     edge but must still appear as a singleton community — the reference
     adds all vertices to the graph before partitioning (api.py:478-487).
+    A NULL id is not a node: it and its edges are left out.
     """
     rows = edge_df.select(src_col, dst_col, weight_col).collect()
-    edges = [(r[src_col], r[dst_col], float(r[weight_col])) for r in rows]
+    edges = [
+        (r[src_col], r[dst_col], float(r[weight_col]))
+        for r in rows
+        if r[src_col] is not None and r[dst_col] is not None
+    ]
     nodes = {n for a, b, _ in edges for n in (a, b)}
     if nodes_df is not None:
-        nodes |= {r[0] for r in nodes_df.collect()}
+        nodes |= {r[0] for r in nodes_df.collect() if r[0] is not None}
     nodes = sorted(nodes)
     mapping, name = _greedy_modularity(nodes, edges)
     spark = edge_df.sparkSession

@@ -29,7 +29,7 @@ Semantics reproduced (and where they differ, why):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from holochatstats_spark.functions.classify import (
@@ -69,24 +69,17 @@ _MESSAGE_COUNTERS_SQL = tuple(
 )
 
 
-def message_counters() -> list[Column]:
-    """The A1 message counters, one aggregate per COUNTED_CATEGORIES entry
-    plus total_message_count. A row counts iff it is not a membership
-    event and its category survived classification. build_user_data and
-    the streaming stream_user_counters both aggregate with this one list,
-    so the stream's window rollup equals the batch silver counters by
-    construction. Each counter is one SQL expression."""
-    return [F.expr(e) for e in _MESSAGE_COUNTERS_SQL]
+def aggregate_per_user(messages: DataFrame) -> DataFrame:
+    """messages (bronze) → one row per (channel_id, video_id, user_id):
+    every silver column except observed_month. The batch build_user_data
+    and the stream (streaming.stream_user_counters) both run this one
+    aggregate, so a stream's rows are silver rows by construction.
 
-
-def build_user_data(messages: DataFrame) -> DataFrame:
-    """messages (bronze) → user_data (silver): one row per
-    (channel_id, video_id, user_id). Expects columns: channel_id,
-    video_id, user_id, username, ts (UTC wall-clock timestamp_ntz),
-    membership_rank, message_category, message, message_type; optional seq
-    for total ordering within equal timestamps. observed_month is the month
-    of the video's last message; a video whose rows all have a NULL ts
-    keeps a NULL observed_month.
+    Expects columns: channel_id, video_id, user_id, username, ts (UTC
+    wall-clock timestamp_ntz), membership_rank, message_category, message,
+    message_type; optional seq for total ordering within equal timestamps.
+    A row counts toward the counters iff it is not a membership event and
+    its category survived classification.
     """
     msgs = classify_messages(messages)
     if "seq" not in msgs.columns:
@@ -101,12 +94,12 @@ def build_user_data(messages: DataFrame) -> DataFrame:
         " OR membership_rank != -2)"
     )
     order_key = "struct(ts, seq)"
-    per_user = (
+    return (
         msgs.groupBy("channel_id", "video_id", "user_id")
         .agg(
             F.expr(f"max_by(username, {order_key}) AS username"),
             F.expr("max(ts) AS last_message_at"),
-            *message_counters(),
+            *(F.expr(e) for e in _MESSAGE_COUNTERS_SQL),
             F.expr(
                 f"CAST(coalesce(max_by(CASE WHEN {has_known_rank} THEN membership_rank END,"
                 f" CASE WHEN {has_known_rank} THEN {order_key} END), -2) AS INT)"
@@ -119,10 +112,16 @@ def build_user_data(messages: DataFrame) -> DataFrame:
         .drop("has_gift_event", "no_known_rank")
     )
 
+
+def build_user_data(messages: DataFrame) -> DataFrame:
+    """messages (bronze) → user_data (silver): aggregate_per_user plus
+    observed_month, the month of the video's last message; a video whose
+    rows all have a NULL ts keeps a NULL observed_month.
+    """
     # observed_month: month of the video's LAST message (any user) —
     # window over the per-user aggregate (cardinality = users/video), not
     # the raw messages.
-    return per_user.withColumn(
+    return aggregate_per_user(messages).withColumn(
         "observed_month",
         F.expr("trunc(max(last_message_at) OVER (PARTITION BY channel_id, video_id), 'MM')"),
     )

@@ -1,23 +1,32 @@
-"""Structured Streaming ingestion — the streaming variant of the A1
-ingest aggregate (SURVEY §2.10: the reference is a nightly batch pipeline;
-its chat iterator is a hand-rolled stateful aggregate over an
-unbounded-ish replay stream, chat_downloader.py:41-132 — the Spark-native
-expression of that is readStream + windowed aggregation).
+"""Structured Streaming ingestion: the batch A1 silver aggregate run on a
+file-source stream of landed chat replays (SURVEY §2.10: the same A1
+aggregate, late data tolerated to end-of-stream since replays are
+complete; the reference's chat iterator is a hand-rolled stateful
+aggregate over a replay stream, chat_downloader.py:41-132).
 
-Design:
-- file source on the chat-log landing directory, SAME explicit schema as
-  the batch bronze reader (inference is disallowed on streams);
-- event-time tumbling windows keyed (window, channel, video, user).
-  Timestamps are UTC wall-clock ``timestamp_ntz``; the library sets no
-  session conf. The watermark and the window run on ``event_time =
-  timestamp_micros(timestamp)``, not on the NTZ ``ts``: Spark rejects an
-  NTZ event time (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and the window
-  bounds of an instant are epoch arithmetic, the same under every session
-  time zone. ``last_message_at`` stays ``max(ts)``, NTZ. Replay lines later
-  than the watermark are dropped;
-- the per-window counters roll up to the batch A1 frame by summing over
-  windows (counters are associative; last_message_at is a max) — the
-  downstream gold builds are unchanged;
+The contract. A stream's result equals the batch result on the files
+landed so far (prefix consistency, as Structured Streaming defines it):
+- each row of each landed file counts once. The stream reads through the
+  batch reader's schema and video_id/ts projection
+  (sources/chat_logs.with_video_ts) and aggregates with the batch silver
+  aggregate (operators/ingest.aggregate_per_user), so its rows are silver
+  rows without observed_month, every column included: counters,
+  username, membership_rank, last_message_at and is_gift. In update mode
+  the last row emitted per key is that key's silver row; in complete mode
+  every batch emits all of them;
+- nothing is dropped for lateness or age. There is no event-time window
+  and no watermark, so a replay of an older video (a backfill, a
+  re-download) landing after a restart is aggregated like any other.
+  The file source reads every new file whatever its modification time
+  (``MAX_FILE_AGE``);
+- state is one row per silver row and is never evicted. A replay carries
+  no video-complete signal to evict on, and complete mode keeps every row
+  anyway, so state grows with the silver rows its checkpoint has seen;
+- a replay re-landed under a new file name counts twice (the file source
+  tracks files by path). The month rebuild (operators/ingest.py over the
+  landing, idempotent month-partition overwrite) is the system of record.
+
+Batches and state:
 - micro-batches are bounded in bytes (``MAX_BYTES_PER_TRIGGER``, 256 MiB
   of gzipped replay), not in files. What a batch costs in read work and
   memory grows with its bytes, and one replay is a few KB for a short
@@ -37,13 +46,6 @@ Design:
   count (batch shuffles start at AQE's ``initialPartitionNum``, 32), so
   the catch-up commits one store per core. A cluster sizes it from the
   state's volume, and the batch width from the data's.
-
-At scale this runs continuously against the landing zone with checkpoint
-state in the stream's checkpointLocation; the batch path (operators/
-ingest.py) remains the rebuild/backfill path. Both produce the same
-silver counters by construction: they read through one video_id/ts
-projection (sources/chat_logs.with_video_ts) and aggregate one counter
-list (operators/ingest.message_counters).
 """
 
 from __future__ import annotations
@@ -51,45 +53,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from holochatstats_spark.operators.ingest import classify_messages, message_counters
+from holochatstats_spark.operators.ingest import aggregate_per_user
 from holochatstats_spark.sources.chat_logs import MESSAGE_SCHEMA, with_video_ts
 
 
 # Upper bound on the compressed replay bytes one micro-batch reads.
 MAX_BYTES_PER_TRIGGER = 256 * 1024 * 1024
+# Oldest file the source reads, measured from the newest it has seen:
+# 100 years, older than any mtime since the epoch.
+MAX_FILE_AGE = "36500d"
 
 
 def stream_messages(spark: SparkSession, path: str) -> DataFrame:
     """Streaming twin of sources/chat_logs.read_chat_logs: same schema,
     same video_id/ts projection. Each micro-batch reads at most
-    ``MAX_BYTES_PER_TRIGGER`` bytes of landed files (at least one file)."""
+    ``MAX_BYTES_PER_TRIGGER`` bytes of landed files (at least one file).
+
+    Every landed file is read once, whatever its modification time. The
+    file source skips a file more than ``maxFileAge`` (7 days by default)
+    older than the newest file it has seen, so after a restart a backfill
+    copied with its original mtime (``cp -p``, tar) would be lost without
+    an error. ``MAX_FILE_AGE`` is longer than any mtime since the epoch.
+    It costs one seen-file entry per replay in the query's memory, the
+    files the source's metadata log records anyway."""
     return with_video_ts(
         spark.readStream.schema(MESSAGE_SCHEMA)
         .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
+        .option("maxFileAge", MAX_FILE_AGE)
         .json(path)
     )
 
 
-def stream_user_counters(
-    messages: DataFrame,
-    channel_id: str,
-    window_duration: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Windowed streaming A1 counters: per (window, channel, video, user)
-    the batch counter list (operators/ingest.message_counters) plus the
-    last message ts. Summing across windows reproduces the batch counters
-    exactly (associative aggregates only — the order-sensitive
-    rank/username selection stays in the batch rebuild, which is the
-    system of record for those columns)."""
-    msgs = classify_messages(
-        messages.withColumn("channel_id", F.lit(channel_id))
-    ).withColumn("event_time", F.timestamp_micros("timestamp")).withWatermark(
-        "event_time", watermark
-    )
-    return msgs.groupBy(
-        F.window("event_time", window_duration),
-        "channel_id",
-        "video_id",
-        "user_id",
-    ).agg(*message_counters(), F.max("ts").alias("last_message_at"))
+def stream_user_counters(messages: DataFrame, channel_id: str) -> DataFrame:
+    """The silver aggregate (operators/ingest.aggregate_per_user) over
+    ``messages`` tagged with ``channel_id``: one row per (channel, video,
+    user) with every silver column but observed_month, a window over each
+    video's rows that the month rebuild computes."""
+    return aggregate_per_user(messages.withColumn("channel_id", F.lit(channel_id)))

@@ -2,7 +2,8 @@
 
 This is the same comparison the driver runs at sf0.01 (tools/check_oracle.py
 runs that scale); the smoke scale keeps the suite fast. The per-user
-type-set queries are also compared on a copy with NULL event types.
+type-set queries are also compared on a copy with NULL event types, and
+the rows-only channel_clustering runs on it (a NULL type is not a node).
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def null_type_sf(tmp_path_factory):
     )
 
 
-@pytest.mark.parametrize("name", ["exclusive_users", "overlap_matrix"])
+@pytest.mark.parametrize("name", ["channel_clustering", "exclusive_users", "overlap_matrix"])
 def test_null_event_type_matches_oracle(spark, null_type_sf, name):
     problems = compare_query(spark, duck_connection(null_type_sf), REGISTRY[name], null_type_sf)
     assert not problems, f"{name}: " + "; ".join(problems)
